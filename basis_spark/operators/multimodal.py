@@ -211,14 +211,6 @@ def attach_binary(docs: DataFrame) -> DataFrame:
     )
 
 
-def resize_image(payload: bytes, w: int, h: int) -> bytes:
-    """Real image resize — requires a codec library not present here."""
-    raise NotImplementedError(
-        "image resize requires PIL/opencv, not available in this container; "
-        "use the fake_resize plumbing path"
-    )
-
-
 def fake_resize(payload: bytes, w: int, h: int) -> bytes:
     """Deterministic resize stand-in: stride-sample the byte stream to w*h
     bytes (same contract as a real thumbnailer: bytes in, smaller bytes
@@ -295,14 +287,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, thumb_bytes long, "
             "mean_r double, mean_g double, mean_b double"
         ),
-    )
-
-
-def sample_frames(payload: bytes, every_n: int) -> list[bytes]:
-    """Real video frame sampling — requires a demuxer not present here."""
-    raise NotImplementedError(
-        "frame sampling requires ffmpeg/pyav, not available in this container; "
-        "use the fake_frames plumbing path"
     )
 
 

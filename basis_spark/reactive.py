@@ -17,7 +17,11 @@ Model (mirrors the reference's block/stream semantics):
   file per node (`base_dir/<node>/_consumed.json` — the reference's
   metadata-DB consumption log), so a restarted Reactor resumes exactly
   where the last one stopped.
-- `poll()` runs one propagation pass in topological order — a new
+- Every node's block schema is pinned by its first block
+  (`base_dir/<node>/_schema.json`); a later block whose schema differs
+  is refused before anything is written.
+- `poll()` runs one propagation pass level by level (a node's level is
+  one more than its deepest input's; sources are level 0) — a new
   source block flows through the whole downstream cone in a single
   pass. `run_until_idle()` polls until a pass moves no data.
 
@@ -29,17 +33,26 @@ per advanced node. Transform fns are ordinary DataFrame code, so
 Catalyst fuses each node's increment plan; aggregating nodes follow the
 reference's accumulator pattern (emit per-increment partials, merge on
 read — see rollup_incremental) rather than holding driver state.
+The scan carries the node's pinned schema, so building a read runs no
+schema-inference job. The fresh nodes of one level are independent, so
+they run concurrently, one thread each (fn, block write, commit), and
+fill executor slots one node's small increment job leaves idle; the
+threads inherit the caller's job group and tags.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from glob import glob
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -54,6 +67,7 @@ class Reactor:
         self.spark = spark
         self.base = base_dir
         self._nodes: dict[str, _RNode] = {}
+        self._schemas: dict[str, StructType] = {}
         os.makedirs(base_dir, exist_ok=True)
 
     # ---------------------------------------------------- wiring ----
@@ -61,6 +75,13 @@ class Reactor:
         self._nodes[name] = _RNode(name=name)
 
     def node(self, name: str, fn: Callable[..., DataFrame], inputs: list[str]) -> None:
+        """Declare a transform node: on each pass that finds new blocks
+        in any input, fn receives one increment DataFrame per input
+        (None for an input with nothing new) and returns the node's
+        next block. fns of independent nodes (same level, neither an
+        input of the other) may run concurrently in separate threads,
+        so a fn must not share unsynchronized mutable state with
+        another node's fn."""
         missing = [u for u in inputs if u not in self._nodes]
         if missing:
             raise ValueError(f"node {name!r}: unknown inputs {missing}")
@@ -85,15 +106,30 @@ class Reactor:
     def _consumed(self, name: str) -> dict[str, int]:
         p = self._state_path(name)
         if os.path.exists(p):
-            return json.load(open(p))
+            with open(p) as fh:
+                return json.load(fh)
         return {}
 
-    def _commit_consumed(self, name: str, state: dict[str, int]) -> None:
-        p = self._state_path(name)
-        tmp = f"{p}.tmp.{os.getpid()}"
+    def _write_atomic(self, p: str, text: str) -> None:
+        tmp = f"{p}.tmp.{os.getpid()}.{threading.get_ident()}"
         with open(tmp, "w") as fh:
-            json.dump(state, fh)
+            fh.write(text)
         os.replace(tmp, p)
+
+    def _commit_consumed(self, name: str, state: dict[str, int]) -> None:
+        self._write_atomic(self._state_path(name), json.dumps(state))
+
+    def _schema_path(self, name: str) -> str:
+        return os.path.join(self._dir(name), "_schema.json")
+
+    def _schema(self, name: str) -> StructType | None:
+        """The node's pinned block schema: kept in memory once known,
+        else loaded from the file its first append wrote."""
+        s = self._schemas.get(name)
+        if s is None and os.path.exists(p := self._schema_path(name)):
+            with open(p) as fh:
+                s = self._schemas[name] = StructType.fromJson(json.load(fh))
+        return s
 
     def _append_block(self, name: str, df: DataFrame) -> int:
         # Write to a staging dir, then publish with one atomic rename:
@@ -103,9 +139,25 @@ class Reactor:
         # spark.read fail with UNABLE_TO_INFER_SCHEMA (no committed
         # footer yet). Staging dirs start with '_' so _blocks() never
         # globs them.
+        #
+        # The first block pins the node's schema; every later block must
+        # match it (nullability aside: Spark reads parquet as nullable),
+        # so reads can skip schema inference. A drifting block is refused
+        # here, before anything is written.
         n = self.n_blocks(name)
-        tmp = os.path.join(self._dir(name), f"_staging_block_{n}_{os.getpid()}")
+        schema, pinned = df.schema, self._schema(name)
+        if n and pinned is not None and schema.simpleString() != pinned.simpleString():
+            raise ValueError(
+                f"node {name!r}: block schema {schema.simpleString()} differs "
+                f"from the pinned {pinned.simpleString()}"
+            )
+        tmp = os.path.join(
+            self._dir(name), f"_staging_block_{n}_{os.getpid()}_{threading.get_ident()}"
+        )
         df.write.mode("overwrite").parquet(tmp)
+        if not n or pinned is None:
+            self._write_atomic(self._schema_path(name), schema.json())
+            self._schemas[name] = schema
         # Publish: if a concurrent appender took block=n between the
         # n_blocks() read and our rename, retry the RENAME ONLY at the
         # next free index — the staged parquet needs no rewrite, so the
@@ -140,7 +192,14 @@ class Reactor:
         blocks = self._blocks(name)
         if not blocks:
             raise ValueError(f"node {name!r} has produced no blocks yet")
-        return self.spark.read.parquet(*blocks)
+        return self._scan(name, blocks)
+
+    def _scan(self, name: str, blocks: list[str]) -> DataFrame:
+        reader = self.spark.read
+        schema = self._schema(name)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*blocks)
 
     def _read_increment(self, name: str, frm: int, to: int) -> DataFrame | None:
         # Half-open [frm:to] slice, NOT [frm:]: poll() records `to` as
@@ -149,7 +208,7 @@ class Reactor:
         # pass — reading it now would process it without recording it,
         # and the next poll would emit its rows a second time.
         blocks = self._blocks(name)[frm:to]
-        return self.spark.read.parquet(*blocks) if blocks else None
+        return self._scan(name, blocks) if blocks else None
 
     # ------------------------------------------------- propagation ----
     def _topo(self) -> list[str]:
@@ -170,38 +229,69 @@ class Reactor:
             visit(n, ())
         return order
 
+    def _levels(self) -> list[list[str]]:
+        """Transform nodes grouped by depth: a source is depth 0, any
+        other node one more than its deepest input. Nodes of one level
+        never feed each other."""
+        depth: dict[str, int] = {}
+        levels: list[list[str]] = []
+        for n in self._topo():
+            nd = self._nodes[n]
+            if nd.fn is None:
+                depth[n] = 0
+                continue
+            d = depth[n] = 1 + max((depth[u] for u in nd.inputs), default=0)
+            levels.extend([] for _ in range(d - len(levels)))
+            levels[d - 1].append(n)
+        return levels
+
+    def _pending(self, name: str) -> tuple[list[DataFrame | None], dict[str, int]] | None:
+        """The node's increments and the watermarks that consuming them
+        commits, or None if no input has a new block."""
+        state = self._consumed(name)
+        incs: list[DataFrame | None] = []
+        new_state = dict(state)
+        for u in self._nodes[name].inputs:
+            have = self.n_blocks(u)
+            incs.append(self._read_increment(u, state.get(u, 0), have))
+            new_state[u] = have
+        return (incs, new_state) if any(x is not None for x in incs) else None
+
+    def _step(self, name: str, incs: list[DataFrame | None], new_state: dict[str, int]) -> int:
+        out = self._nodes[name].fn(*incs)  # None increments: input had nothing new
+        n = self._append_block(name, out)
+        # Commit consumption AFTER the block lands: a crash between
+        # the two re-processes the increment (at-least-once within
+        # the pass) but never skips one; readers dedupe on replay
+        # the same way the reference replays an uncommitted block.
+        self._commit_consumed(name, new_state)
+        return n
+
     def poll(self) -> dict[str, int]:
         """One propagation pass: every transform node with unconsumed
         upstream blocks runs over exactly those increments and appends
         one output block. Returns {node: appended block index} for the
-        nodes that moved. Topological order means a fresh source block
-        reaches the deepest downstream node in a single poll."""
+        nodes that moved. Levels run in order, so a fresh source block
+        reaches the deepest downstream node in a single poll; the fresh
+        nodes of one level run concurrently. If a node raises, the rest
+        of its level still finishes and commits, no later level runs,
+        and the first error (in level order) is re-raised."""
         moved: dict[str, int] = {}
-        for name in self._topo():
-            nd = self._nodes[name]
-            if nd.fn is None:
-                continue
-            state = self._consumed(name)
-            incs: list[DataFrame] = []
-            fresh = False
-            new_state = dict(state)
-            for u in nd.inputs:
-                frm = state.get(u, 0)
-                have = self.n_blocks(u)
-                inc = self._read_increment(u, frm, have)
-                if inc is not None:
-                    fresh = True
-                incs.append(inc)
-                new_state[u] = have
-            if not fresh:
-                continue
-            out = nd.fn(*incs)  # None increments: input had nothing new
-            moved[name] = self._append_block(name, out)
-            # Commit consumption AFTER the block lands: a crash between
-            # the two re-processes the increment (at-least-once within
-            # the pass) but never skips one; readers dedupe on replay
-            # the same way the reference replays an uncommitted block.
-            self._commit_consumed(name, new_state)
+        for level in self._levels():
+            work = [(n, p) for n in level if (p := self._pending(n)) is not None]
+            if len(work) == 1:
+                name, (incs, new_state) = work[0]
+                moved[name] = self._step(name, incs, new_state)
+            elif work:
+                # Wrapped here, after the caller set its job group: the
+                # wrapper copies the local properties it sees now.
+                step = inheritable_thread_target(self.spark)(self._step)
+                with ThreadPoolExecutor(len(work), thread_name_prefix="reactor") as pool:
+                    futs = [pool.submit(step, n, *p) for n, p in work]
+                err = next((e for f in futs if (e := f.exception()) is not None), None)
+                if err is not None:
+                    raise err
+                moved.update((n, f.result()) for (n, _), f in zip(work, futs))
         return moved
 
     def run_until_idle(self, max_polls: int = 100) -> int:

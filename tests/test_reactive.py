@@ -18,6 +18,27 @@ def _events_slice(spark, lo, hi):
     )
 
 
+def _diamond(spark, base, purchases_fn=None):
+    r = Reactor(spark, base)
+    r.source("raw")
+    # purchases is declared first so that a failing purchases fn comes
+    # before clicks in its level.
+    r.node(
+        "purchases",
+        purchases_fn or (lambda inc: inc.filter(F.col("event_type") == "purchase")),
+        ["raw"],
+    )
+    r.node("clicks", lambda inc: inc.filter(F.col("event_type") == "click"), ["raw"])
+
+    def per_user(c, p):
+        cu = c.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_clicks"))
+        pu = p.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_purch"))
+        return cu.join(pu, "user_id", "full").na.fill(0)
+
+    r.node("joined", per_user, ["clicks", "purchases"])
+    return r
+
+
 def test_incremental_propagation_at_most_once(spark, tmp_path):
     r = Reactor(spark, str(tmp_path))
     r.source("raw")
@@ -52,18 +73,7 @@ def test_diamond_single_pass_and_block_counts(spark, tmp_path):
     """A diamond (raw -> a, b -> joined) must propagate a fresh source
     block to the sink in ONE poll, with each node appending exactly one
     block per pass."""
-    r = Reactor(spark, str(tmp_path))
-    r.source("raw")
-    r.node("clicks", lambda inc: inc.filter(F.col("event_type") == "click"), ["raw"])
-    r.node("purchases", lambda inc: inc.filter(F.col("event_type") == "purchase"), ["raw"])
-
-    def per_user(c, p):
-        cu = c.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_clicks"))
-        pu = p.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_purch"))
-        return cu.join(pu, "user_id", "full").na.fill(0)
-
-    r.node("joined", per_user, ["clicks", "purchases"])
-
+    r = _diamond(spark, str(tmp_path))
     r.feed("raw", _events_slice(spark, 0, 500))
     moved = r.poll()
     assert set(moved) == {"clicks", "purchases", "joined"}
@@ -223,3 +233,120 @@ def test_serve_lease_excludes_second_daemon(spark, tmp_path):
     r3 = Reactor(spark, str(tmp_path))
     r3._acquire_lease(lease_ttl_s=600.0)  # stale -> stolen, no raise
     r3._release_lease()
+
+
+# ------------------------------------------------------------------
+# Schema pinning and concurrent same-level nodes.
+
+
+def _jobs(spark, group):
+    """Job ids of a job group (None: jobs outside any group), read once
+    the listener bus has fed every posted event to the status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _clear_job_group(spark):
+    sc = spark.sparkContext
+    for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(k, None)
+
+
+def test_poll_jobs_carry_caller_job_group_and_schemas_match_inference(spark, tmp_path):
+    """Every job a poll runs, including those of nodes run in worker
+    threads, carries the caller's job group; every node's pinned read
+    schema equals what plain parquet inference returns."""
+    r = _diamond(spark, str(tmp_path))
+    r.feed("raw", _events_slice(spark, 0, 500))
+    ungrouped = _jobs(spark, None)
+    spark.sparkContext.setJobGroup("reactive-poll", "reactive-poll")
+    try:
+        assert set(r.poll()) == {"clicks", "purchases", "joined"}
+    finally:
+        _clear_job_group(spark)
+    assert _jobs(spark, "reactive-poll"), "poll ran no job under the caller's group"
+    assert _jobs(spark, None) - ungrouped == set(), "a poll job lost the job group"
+    for n in ("raw", "clicks", "purchases", "joined"):
+        assert r.read(n).schema == spark.read.parquet(*r._blocks(n)).schema, n
+
+
+def test_restarted_reactor_reads_increments_without_jobs(spark, tmp_path):
+    """A fresh Reactor over an existing dir loads the pinned schemas, so
+    building increment and full reads runs no Spark job; inferring the
+    same schema does."""
+    base = str(tmp_path)
+    r1 = Reactor(spark, base)
+    r1.source("raw")
+    r1.feed("raw", _events_slice(spark, 0, 50))
+    r1.feed("raw", _events_slice(spark, 50, 100))
+
+    r2 = Reactor(spark, base)
+    r2.source("raw")
+    spark.sparkContext.setJobGroup("reactive-pinned", "reactive-pinned")
+    try:
+        inc = r2._read_increment("raw", 1, r2.n_blocks("raw"))
+        full = r2.read("raw")
+    finally:
+        _clear_job_group(spark)
+    assert _jobs(spark, "reactive-pinned") == set()
+    assert inc.schema == full.schema == _events_slice(spark, 0, 1).schema
+
+    spark.sparkContext.setJobGroup("reactive-inferred", "reactive-inferred")
+    try:
+        spark.read.parquet(*r2._blocks("raw"))
+    finally:
+        _clear_job_group(spark)
+    assert _jobs(spark, "reactive-inferred"), "inference ran no job: the count proves nothing"
+
+
+def test_schema_drift_is_refused_before_any_write(spark, tmp_path):
+    import os
+
+    import pytest
+
+    r = Reactor(spark, str(tmp_path))
+    r.source("raw")
+    widen = {"on": False}
+
+    def out(inc):
+        df = inc.select("event_id")
+        return df.withColumn("extra", F.lit(1)) if widen["on"] else df
+
+    r.node("out", out, ["raw"])
+    r.feed("raw", _events_slice(spark, 0, 10))
+    r.poll()
+    widen["on"] = True
+    r.feed("raw", _events_slice(spark, 10, 20))
+    with pytest.raises(ValueError, match="differs from the pinned"):
+        r.poll()
+    assert r.n_blocks("out") == 1
+    assert r._consumed("out") == {"raw": 1}
+    assert not [p for p in os.listdir(tmp_path / "out") if p.startswith("_staging")]
+
+
+def test_failing_node_leaves_siblings_committed(spark, tmp_path):
+    """When one node of a level raises, its sibling still lands its
+    block and watermark; the failed node and everything downstream are
+    left for the next poll, which runs only them."""
+    import pytest
+
+    broken = {"on": True}
+
+    def purchases(inc):
+        if broken["on"]:
+            raise RuntimeError("purchases fn failed")
+        return inc.filter(F.col("event_type") == "purchase")
+
+    r = _diamond(spark, str(tmp_path), purchases)
+    r.feed("raw", _events_slice(spark, 0, 300))
+    with pytest.raises(RuntimeError, match="purchases fn failed"):
+        r.poll()
+    assert (r.n_blocks("clicks"), r._consumed("clicks")) == (1, {"raw": 1})
+    assert (r.n_blocks("purchases"), r._consumed("purchases")) == (0, {})
+    assert r.n_blocks("joined") == 0
+
+    broken["on"] = False
+    assert set(r.poll()) == {"purchases", "joined"}
+    assert r.n_blocks("clicks") == 1
+    assert r.poll() == {}
