@@ -44,13 +44,11 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from glob import glob
 
-from pyspark import inheritable_thread_target
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -111,7 +109,7 @@ class Reactor:
         return {}
 
     def _write_atomic(self, p: str, text: str) -> None:
-        tmp = f"{p}.tmp.{os.getpid()}.{threading.get_ident()}"
+        tmp = f"{p}.tmp.{os.getpid()}"
         with open(tmp, "w") as fh:
             fh.write(text)
         os.replace(tmp, p)
@@ -143,21 +141,24 @@ class Reactor:
         # The first block pins the node's schema; every later block must
         # match it (nullability aside: Spark reads parquet as nullable),
         # so reads can skip schema inference. A drifting block is refused
-        # here, before anything is written.
+        # here, before anything is written. A dir whose blocks predate
+        # the pin file is pinned once from its first block on disk.
         n = self.n_blocks(name)
-        schema, pinned = df.schema, self._schema(name)
-        if n and pinned is not None and schema.simpleString() != pinned.simpleString():
+        schema = df.schema
+        pinned = self._schema(name) if n else None
+        if n and pinned is None:
+            pinned = self.spark.read.parquet(self._blocks(name)[0]).schema
+        if pinned is not None and schema.simpleString() != pinned.simpleString():
             raise ValueError(
                 f"node {name!r}: block schema {schema.simpleString()} differs "
                 f"from the pinned {pinned.simpleString()}"
             )
-        tmp = os.path.join(
-            self._dir(name), f"_staging_block_{n}_{os.getpid()}_{threading.get_ident()}"
-        )
+        tmp = os.path.join(self._dir(name), f"_staging_block_{n}_{os.getpid()}")
         df.write.mode("overwrite").parquet(tmp)
-        if not n or pinned is None:
-            self._write_atomic(self._schema_path(name), schema.json())
-            self._schemas[name] = schema
+        if pinned is None or name not in self._schemas:
+            pinned = pinned or schema
+            self._write_atomic(self._schema_path(name), pinned.json())
+            self._schemas[name] = pinned
         # Publish: if a concurrent appender took block=n between the
         # n_blocks() read and our rename, retry the RENAME ONLY at the
         # next free index — the staged parquet needs no rewrite, so the
@@ -279,20 +280,34 @@ class Reactor:
         moved: dict[str, int] = {}
         for level in self._levels():
             work = [(n, p) for n in level if (p := self._pending(n)) is not None]
-            if len(work) == 1:
-                name, (incs, new_state) = work[0]
-                moved[name] = self._step(name, incs, new_state)
-            elif work:
-                # Wrapped here, after the caller set its job group: the
-                # wrapper copies the local properties it sees now.
-                step = inheritable_thread_target(self.spark)(self._step)
-                with ThreadPoolExecutor(len(work), thread_name_prefix="reactor") as pool:
-                    futs = [pool.submit(step, n, *p) for n, p in work]
-                err = next((e for f in futs if (e := f.exception()) is not None), None)
-                if err is not None:
-                    raise err
-                moved.update((n, f.result()) for (n, _), f in zip(work, futs))
+            moved.update(self._run_level(work))
         return moved
+
+    def _run_level(self, work: list[tuple[str, tuple]]) -> dict[str, int]:
+        """Step the given nodes of one level, one thread each; an empty
+        level starts no thread. Each thread takes its own copy of the
+        caller's JVM local properties (job group, tags) at start(), so
+        sibling nodes' SQL executions never share one properties map."""
+        results: list[int | BaseException | None] = [None] * len(work)
+
+        def run(i: int, name: str, *pending) -> None:
+            try:
+                results[i] = self._step(name, *pending)
+            except BaseException as e:
+                results[i] = e
+
+        threads = [
+            InheritableThread(run, args=(i, n, *p), session=self.spark)
+            for i, (n, p) in enumerate(work)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        err = next((r for r in results if isinstance(r, BaseException)), None)
+        if err is not None:
+            raise err
+        return {n: r for (n, _), r in zip(work, results)}
 
     def run_until_idle(self, max_polls: int = 100) -> int:
         """Poll until a pass moves nothing; returns number of passes."""

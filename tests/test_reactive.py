@@ -350,3 +350,66 @@ def test_failing_node_leaves_siblings_committed(spark, tmp_path):
     assert set(r.poll()) == {"purchases", "joined"}
     assert r.n_blocks("clicks") == 1
     assert r.poll() == {}
+
+
+def test_sibling_nodes_get_their_own_local_properties(spark, tmp_path):
+    """Sibling nodes run with separate copies of the caller's JVM local
+    properties: a property one node's thread sets (as every SQL
+    execution sets spark.sql.execution.id) is not seen by the other
+    node's thread, nor by the caller."""
+    import threading
+
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=60)
+    seen = {}
+
+    def tagged(name):
+        def fn(inc):
+            sc.setLocalProperty("reactive.test.node", name)
+            both_set.wait()
+            seen[name] = (
+                sc.getLocalProperty("reactive.test.node"),
+                sc.getLocalProperty("spark.sql.execution.id"),
+            )
+            return inc.select("event_id")
+
+        return fn
+
+    r = Reactor(spark, str(tmp_path))
+    r.source("raw")
+    r.node("a", tagged("a"), ["raw"])
+    r.node("b", tagged("b"), ["raw"])
+    r.feed("raw", _events_slice(spark, 0, 50))
+    assert set(r.poll()) == {"a", "b"}
+    assert seen == {"a": ("a", None), "b": ("b", None)}
+    assert sc.getLocalProperty("reactive.test.node") is None
+    assert sc.getLocalProperty("spark.sql.execution.id") is None
+
+
+def test_dir_without_pin_file_is_pinned_from_its_blocks(spark, tmp_path):
+    """A node dir whose blocks were written without _schema.json is
+    pinned from its first block on disk, not from the block being
+    appended, so drift is refused there too."""
+    import json
+    import os
+
+    import pytest
+
+    base = str(tmp_path)
+    r1 = Reactor(spark, base)
+    r1.source("raw")
+    r1.feed("raw", _events_slice(spark, 0, 10))
+    pin = tmp_path / "raw" / "_schema.json"
+    os.remove(pin)
+
+    r2 = Reactor(spark, base)
+    r2.source("raw")
+    with pytest.raises(ValueError, match="differs from the pinned"):
+        r2.feed("raw", _events_slice(spark, 10, 20).select("event_id"))
+    assert r2.n_blocks("raw") == 1
+    assert not pin.exists()
+
+    r2.feed("raw", _events_slice(spark, 10, 20))
+    inferred = spark.read.parquet(*r2._blocks("raw")).schema
+    assert r2.read("raw").schema == inferred
+    assert json.loads(pin.read_text()) == inferred.jsonValue()
