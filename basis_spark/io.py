@@ -9,10 +9,13 @@ projections declaratively (verified in tests/test_plans.py).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from basis_spark.session import memo
 
 TABLES = (
     "region",
@@ -29,22 +32,11 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Memoized analyzed DataFrames per (session, sf_dir, table). Fixtures are
-# immutable, so reuse is sound; it saves the per-call parquet footer read
-# + schema analysis (a driver-side Py4J round trip each — the dominant
-# per-action floor for sub-second queries, VERDICT r1). NOT persisted by
-# default: plan tests assert PushedFilters/pruning on the raw parquet
-# scan, and at 100 TB you want the scan, not an InMemoryRelation. Set
-# SPARK_GRAFT_CACHE_FIXTURES=1 (bench.py does) to also persist — one
-# persist per (sf_dir, table), never per call: per-call persists of an
-# identical plan stack nested InMemoryRelations (measured 8.7s -> 54s
-# over 3 calls in round 1).
-_df_cache: dict[tuple[str, str, str], DataFrame] = {}
-_conf_enforced: set[str] = set()
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame.
+    """Load one fixture table as a DataFrame, memoized per (session,
+    sf_dir, table): fixtures are immutable, and reuse saves the parquet
+    footer read and schema analysis on every later call.
 
     events.ts is parquet TIMESTAMP(NANOS). How Spark scans it varies by
     version: ≤4.0 refuses natively (PARQUET_TYPE_ILLEGAL) unless
@@ -52,47 +44,49 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     natively as TIMESTAMP_NTZ and ignores that conf. Dispatch on the
     actual scanned type so both work (lossless either way — fixture
     values carry only µs precision, FIXTURES.md): long → integer-divide
-    to µs; ntz → cast to session-TZ timestamp (session is pinned UTC
-    below, so wall-clock values are unchanged).
+    to µs; ntz → cast to session-TZ timestamp (_pin_utc pins the
+    session to UTC, so wall-clock values are unchanged).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Declared semantics are UTC (oracle compares timestamp VALUES; DuckDB
-    # timestamps are naive). Under the driver's own session the timezone is
-    # whatever the host JVM defaults to — a non-UTC session silently shifts
-    # every date extraction/trunc (verified: date_parts under
-    # America/New_York returns h=19 for UTC midnight). Runtime-settable,
-    # so enforce it at the data boundary — once per session: each
-    # conf.set is a Py4J round trip, and nothing in this repo flips these
-    # confs back (the streaming jobs touch only shuffle.partitions).
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _conf_enforced:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _conf_enforced.add(app_id)
-    # Keyed by applicationId, not id(spark): CPython can reuse a stopped
-    # session's id() for a new one, which would hand back DataFrames
-    # bound to the dead session (ADVICE r2).
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    df = _df_cache.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        if name == "events":
-            ts_type = df.schema["ts"].dataType.typeName()
-            if ts_type in ("long", "bigint"):
-                df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-            else:
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if os.environ.get("SPARK_GRAFT_CACHE_FIXTURES"):
-            df = df.persist()
-        _df_cache[key] = df
+    return memo(spark, ("fixture", os.path.abspath(sf_dir), name),
+                lambda: _read_fixture(spark, sf_dir, name))
+
+
+def _pin_utc(spark: SparkSession) -> bool:
+    # Declared semantics are UTC (the oracle compares timestamp values;
+    # DuckDB timestamps are naive), but a session the caller built runs
+    # in the JVM's default timezone, which shifts every date
+    # extraction. Both confs are runtime-settable, so they are enforced
+    # at the data boundary, once per session.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return True
+
+
+def _read_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    memo(spark, ("utc_conf",), lambda: _pin_utc(spark))
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events":
+        ts_type = df.schema["ts"].dataType.typeName()
+        if ts_type in ("long", "bigint"):
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        else:
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    # Not persisted by default: plan tests assert pushed filters and
+    # pruning on the raw parquet scan, and at scale the scan is wanted,
+    # not an InMemoryRelation. SPARK_GRAFT_CACHE_FIXTURES=1 (bench.py
+    # sets it) persists once per memo entry, never per call: per-call
+    # persists of an identical plan stack nested InMemoryRelations.
+    if os.environ.get("SPARK_GRAFT_CACHE_FIXTURES"):
+        df = df.persist()
     return df
 
 
 def scratch_dir(subdir: str = "") -> str:
     """A writable scratch area inside the repo (gitignored) for sinks.
 
-    applicationId-scoped scratch isolates concurrent sessions but
+    Session-scoped scratch (scratch_path) isolates concurrent sessions but
     accumulates one copy per session; every call age-GCs entries in the
     requested subdir untouched for 24 h (far longer than any session
     here lives), so the area is self-cleaning without ever touching a
@@ -103,6 +97,29 @@ def scratch_dir(subdir: str = "") -> str:
     if subdir:
         gc_stale_siblings(path, prefix="", keep="")
     return path
+
+
+def scratch_path(
+    spark: SparkSession, subdir: str, sf_dir: str | None = None, tag: str = "", ext: str = ""
+) -> str:
+    """Session-scoped scratch path for a derived dataset — the one way
+    the library names its scratch files, dirs and tables:
+    scratch_dir(subdir)/<basename>_<digest>[_<tag>]_<applicationId><ext>.
+
+    The applicationId keeps concurrent sessions apart: a shared path
+    and mode('overwrite') would let another process (pytest alongside
+    a sweep) delete files this session is mid-read on. The 8-hex digest
+    of sf_dir's absolute path keeps two SF dirs with one basename apart
+    within a session. Without sf_dir (data that does not depend on
+    the fixtures) the name is <tag>_<applicationId><ext>."""
+    parts = []
+    if sf_dir is not None:
+        apath = os.path.abspath(sf_dir)
+        parts += [os.path.basename(apath), hashlib.md5(apath.encode()).hexdigest()[:8]]
+    if tag:
+        parts.append(tag)
+    parts.append(spark.sparkContext.applicationId)
+    return os.path.join(scratch_dir(subdir), "_".join(parts) + ext)
 
 
 def gc_stale_siblings(parent: str, prefix: str, keep: str, ttl_s: int = 86400) -> None:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from basis_spark.io import load
+from basis_spark.io import load, scratch_path
 from basis_spark.registry import register
 
 HIGH_WATER_EVENT_ID = 5000  # declared high-watermark constant for the batch form
@@ -316,16 +316,10 @@ def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from basis_spark.io import scratch_dir
-
     ev = load(spark, sf_dir, "events")
-    # applicationId-scoped like every other scratch consumer: an
-    # unscoped path + the rmtree below would delete blocks a concurrent
-    # process is mid-read on (same race class as scans._sf_scratch).
-    base = os.path.join(
-        scratch_dir("rollup_incr"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    # Session-scoped: an unscoped path + the rmtree below would delete
+    # blocks a concurrent process is mid-read on.
+    base = scratch_path(spark, "rollup_incr", sf_dir)
     shutil.rmtree(base, ignore_errors=True)  # idempotent per call
     n = ev.count()
     per = (n + 2) // 3
@@ -502,18 +496,14 @@ def stream_reactive_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookkeeping (its checkpoint) while the reactive side owns
     at-most-once per-consumer propagation (its consumption
     watermarks). The accumulated downstream state must equal the batch
-    recompute the oracle runs. applicationId-scoped block store: built
+    recompute the oracle runs. Session-scoped block store: built
     once per session, replayed reads after."""
     import os
 
-    from basis_spark.io import scratch_dir
     from basis_spark.reactive import Reactor
     from basis_spark.streaming.jobs import _read_stream, split_events_to_chunks
 
-    base = os.path.join(
-        scratch_dir("reactive_bridge"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    base = scratch_path(spark, "reactive_bridge", sf_dir)
     r = Reactor(spark, base)
     r.source("raw")
     r.node(

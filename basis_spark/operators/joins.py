@@ -21,9 +21,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from basis_spark.io import load
+from basis_spark.io import load, scratch_path
 from basis_spark.registry import register
-from basis_spark.session import pinned_shuffle_partitions
+from basis_spark.session import memo, pinned_shuffle_partitions
 
 
 @register(
@@ -344,17 +344,15 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     once at write time, never at read time). tests/test_plans.py asserts
     the executed plan has zero Exchange operators under the join.
     """
+    import re
     from urllib.parse import urlparse
 
-    sfx = "sf" + sf_dir.rstrip("/").split("sf")[-1].replace(".", "_")
-    # applicationId-scoped table names: the warehouse dir is shared
-    # across processes, and an un-scoped name lets a concurrent
-    # harness's mode("overwrite") delete bucket files THIS session is
-    # mid-read on (observed as FILED_READ_FILE.FILE_NOT_EXIST when the
-    # pytest suite and a second sweep overlapped). Same guard class as
-    # every other exists-guarded scratch path in the repo.
-    app = spark.sparkContext.applicationId.replace("-", "_")
-    ot, ct = f"orders_bkt_{sfx}_{app}", f"customer_bkt_{sfx}_{app}"
+    # Session-scoped table names (scratch_path's name, as an identifier):
+    # the warehouse dir is shared across processes, and an un-scoped
+    # name lets a concurrent harness's mode("overwrite") delete bucket
+    # files this session is mid-read on.
+    name = re.sub(r"\W", "_", os.path.basename(scratch_path(spark, "", sf_dir))).lower()
+    ot, ct = f"orders_bkt_{name}", f"customer_bkt_{name}"
     cat = spark.catalog
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     # collect other sessions' bucketed copies once they age out (the
@@ -957,31 +955,24 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangles_per_node(e)
 
 
-_edges_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def proximity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected u < v edge list of the distance-15 proximity graph
     over the deterministic md5 plane (shared by graph_triangle_count,
     graph_degree_distribution and graph_jaccard_neighbors). Grid-
     bucketed candidate join — each point probes its 3x3 neighbor cells
     — so edge generation is an equi-join on cell, never O(n^2).
-    Memoized per (applicationId, sf_dir) like io.load's _df_cache:
-    three operators call this, and the eager localCheckpoint at the end
-    runs a full Spark job at DataFrame-construction time — without the
-    memo a sweep pays the md5/grid/join computation three times and
-    pins three copies of the checkpoint blocks."""
-    ckey = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _edges_cache.get(ckey)
-    if cached is not None:
-        return cached
-    edges = (
-        _grid_close_pairs(spark, sf_dir, d_max=15.0)
+    Memoized per (session, sf_dir): three operators call this, and the
+    eager localCheckpoint at the end runs a full Spark job at
+    DataFrame-construction time — without the memo a sweep pays the
+    md5/grid/join computation three times and pins three copies of the
+    checkpoint blocks."""
+    return memo(
+        spark,
+        ("proximity_edges", os.path.abspath(sf_dir)),
+        lambda: _grid_close_pairs(spark, sf_dir, d_max=15.0)
         .select("u", "v")
-        .localCheckpoint()  # edges reused by the degree + closing joins
+        .localCheckpoint(),  # edges reused by the degree + closing joins
     )
-    _edges_cache[ckey] = edges
-    return edges
 
 
 @register(

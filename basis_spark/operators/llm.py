@@ -17,11 +17,13 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from basis_spark.io import load
-from basis_spark.session import pinned_shuffle_partitions, spread_width
+from basis_spark.session import memo, pinned_shuffle_partitions, spread_width
 from basis_spark.registry import register
 
 
@@ -262,39 +264,7 @@ def _exact_jaccard_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-# Memoized persisted (token-sets, band-keys) per (session, sf_dir).
-# Persisting per CALL would stack InMemoryRelations (Spark's CacheManager
-# matches the new identical plan against the previous call's cache, then
-# caches that again): measured 8.7s -> 18.2s -> 54.4s across three
-# invocations. Fixtures are immutable, so one persisted copy per sf_dir
-# is sound and bounded (~2 MB per 1000 docs). Keys include the Spark
-# applicationId so a session restart in the same process rebuilds rather
-# than handing back DataFrames bound to a stopped session.
 _MINHASH_K, _MINHASH_B = 256, 32
-_minhash_cache: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def clear_minhash_caches() -> None:
-    """Unpersist and drop all memoized minhash indexes (bench cold runs)."""
-    for t, bands in _minhash_cache.values():
-        for df in (t, bands):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _minhash_cache.clear()
-    for cand in _minhash_cand_cache.values():
-        try:
-            cand.unpersist()
-        except Exception:
-            pass
-    _minhash_cand_cache.clear()
-    for sh in _ngram_cache.values():
-        try:
-            sh.unpersist()
-        except Exception:
-            pass
-    _ngram_cache.clear()
 
 
 def _band_keys(t: DataFrame, K: int, B: int) -> DataFrame:
@@ -374,16 +344,18 @@ def _band_keys(t: DataFrame, K: int, B: int) -> DataFrame:
 
 
 def _minhash_bands(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    mk = (spark.sparkContext.applicationId, sf_dir)
-    if mk in _minhash_cache:
-        return _minhash_cache[mk]
-    t = _hashed_token_sets(load(spark, sf_dir, "documents")).persist()
-    bands = _band_keys(t, _MINHASH_K, _MINHASH_B).persist()
-    _minhash_cache[mk] = (t, bands)
-    return t, bands
+    """Persisted (token-sets, band-keys), memoized per (session, sf_dir).
+    One persisted copy per sf_dir, never one per call: persisting an
+    identical plan per call stacks InMemoryRelations (the CacheManager
+    matches the new plan against the previous call's cache, then caches
+    that again). Fixtures are immutable, so the copy is sound and
+    bounded (~2 MB per 1000 docs)."""
 
+    def build() -> tuple[DataFrame, DataFrame]:
+        t = _hashed_token_sets(load(spark, sf_dir, "documents")).persist()
+        return t, _band_keys(t, _MINHASH_K, _MINHASH_B).persist()
 
-_minhash_cand_cache: dict[tuple[str, str, int], DataFrame] = {}
+    return memo(spark, ("minhash_bands", os.path.abspath(sf_dir)), build)
 
 
 def _minhash_candidates(
@@ -391,46 +363,29 @@ def _minhash_candidates(
 ) -> DataFrame:
     """Candidate (i, j) pairs surviving the band-count prefilter.
 
-    Counting colliding bands per pair is free relative to the previous
-    dropDuplicates (same shuffle, count instead of distinct) and is
-    itself a Jaccard estimator: a band collides w.p. jac^r. Requiring
-    >= 2 of 32 bands keeps a true 0.9-pair w.p. 1 - 4e-7 (per-band
-    p = 0.9^8 = 0.43) while a median fixture pair (jac 0.63, per-band
-    p = 0.025) rarely reaches 2 — measured 1.24M -> 730K candidates at
-    sf0.1 for zero extra data movement.
+    Counting colliding bands per pair is itself a Jaccard estimator: a
+    band collides w.p. jac^r. Requiring >= 2 of 32 bands keeps a true
+    0.9-pair w.p. 1 - 4e-7 (per-band p = 0.9^8 = 0.43) while a median
+    fixture pair (jac 0.63, per-band p = 0.025) rarely reaches 2.
 
-    Why no K=256 signature-agreement second stage (tried, reverted):
-    fixture token sets average n = 23 xxhash64-encoded longs, so the
-    exact array_intersect re-rank costs LESS per pair than comparing
-    two 256-long signatures — the sharper filter took q11 from ~1 s to
-    ~12 s per call at sf0.1 (wide-sig join + 256-element zip_with per
-    pair). A signature stage only pays when exact re-rank units are
-    large (e.g. shingle sets of long documents), not here.
-
-    Band self-join, not bucket explosion: a groupBy-collect_list +
-    in-bucket nested-transform pair explosion was tried and measured
-    4-5x SLOWER fused-cold at sf0.1 (8.4 s vs 1.8 s) — the per-element
-    slice() inside the lambda re-copies the bucket tail for every
-    anchor (O(b^2) array allocs; max fixture bucket b=832), and a hot
-    bucket's whole pair set materializes in one row on one core. The
-    sort-merge/shuffle self-join spreads the same 10.7M raw pairs
-    across all cores with no intermediate arrays.
+    No K=256 signature-agreement second stage: fixture token sets
+    average n = 23 longs, so the exact array_intersect re-rank costs
+    less per pair than comparing two 256-long signatures. A band
+    self-join, not an in-bucket pair explosion: the shuffle self-join
+    spreads the raw pairs across all cores with no intermediate arrays,
+    where a hot bucket's pair set would otherwise sit in one row.
 
     The candidate set is memoized/persisted per (session, sf_dir,
-    min_bands) like the banding index itself: fixtures are immutable,
-    candidates are a derived index (~12 MB of bare (i, j) at sf0.1).
-    Bench cold runs call clear_minhash_caches() first, so reported cold
-    numbers include this whole build. Persists are lazy, so a cold
-    operator call runs ONE fused job end-to-end — measured 1.2-1.8 s
-    cold / 0.6 s warm at sf0.1.
+    min_bands) like the banding index itself. Persists are lazy, so a
+    cold operator call runs one fused job end to end; bench cold runs
+    forget the three LSH memo kinds first.
     """
-    ck = (spark.sparkContext.applicationId, sf_dir, min_bands)
-    if ck in _minhash_cand_cache:
-        return _minhash_cand_cache[ck]
-    _, bands = _minhash_bands(spark, sf_dir)
-    cand = banded_candidates(bands, ratio_num=9, ratio_den=10, min_bands=min_bands).persist()
-    _minhash_cand_cache[ck] = cand
-    return cand
+
+    def build() -> DataFrame:
+        _, bands = _minhash_bands(spark, sf_dir)
+        return banded_candidates(bands, ratio_num=9, ratio_den=10, min_bands=min_bands).persist()
+
+    return memo(spark, ("minhash_candidates", os.path.abspath(sf_dir), min_bands), build)
 
 
 @register("dedup_near_minhash", oracle=_B11_ORACLE)
@@ -499,23 +454,24 @@ def _exact_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Empirical gate: full re-ranked output old-vs-new geometry diffed
 # IDENTICAL (0 missing, 0 extra) at sf0.001/0.01/0.1.
 _NGRAM_K, _NGRAM_B, _NGRAM_MIN_BANDS = 256, 85, 4
-_ngram_cache: dict[tuple[str, str], DataFrame] = {}
 
 
 def _ngram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct xxhash64-encoded char-3-gram shingle sets per doc,
     memoized/persisted per (session, sf_dir) like the minhash index
-    (per-call persist stacks InMemoryRelations; see _minhash_cache)."""
-    mk = (spark.sparkContext.applicationId, sf_dir)
-    if mk in _ngram_cache:
-        return _ngram_cache[mk]
+    (per-call persist stacks InMemoryRelations; see _minhash_bands)."""
+    return memo(spark, ("ngram_shingles", os.path.abspath(sf_dir)),
+                lambda: _build_ngram_shingles(spark, sf_dir))
+
+
+def _build_ngram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # length >= 3 guard: Spark's sequence(1, len-2) DESCENDS for len < 3
     # ([1, 0, -1]-style), fabricating junk shingles a shorter-than-gram
     # doc must not have (the oracle's range() is empty there). A doc
     # with no shingles can never pair, so filtering it equals emitting
     # an empty set.
     docs = load(spark, sf_dir, "documents").filter(F.length("text") >= 3)
-    sh = (
+    return (
         docs.repartition(spread_width(64), "doc_id")
         .select(
             "doc_id",
@@ -532,8 +488,6 @@ def _ngram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.size("toks"))
         .persist()
     )
-    _ngram_cache[mk] = sh
-    return sh
 
 
 @register(

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_dir
+from basis_spark.io import load, scratch_path
 from basis_spark.session import spread_width
 from basis_spark.registry import register
 
@@ -1214,12 +1214,7 @@ def multimodal_tar_shard_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tarfile as _tarfile
 
-    from basis_spark.io import scratch_dir
-
-    shard = os.path.join(
-        scratch_dir("tar_shards"),
-        f"shard_{spark.sparkContext.applicationId}.tar",
-    )
+    shard = scratch_path(spark, "tar_shards", tag="shard", ext=".tar")
     if not os.path.exists(shard):
         tmp = shard + f".tmp.{os.getpid()}"
         with _tarfile.open(tmp, "w") as tf:
@@ -1310,13 +1305,7 @@ def multimodal_tar_shard_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shard routing), which is what makes parallel shard writes safe
     # with no coordination; at fleet scale this is
     # repartition(shard_id) + this generator, the standard recipe.
-    import os
-
-    out_dir = os.path.join(
-        scratch_dir("tar_write"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_path(spark, "tar_write", sf_dir)
     docs = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 120)

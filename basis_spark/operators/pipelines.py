@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_dir
+from basis_spark.io import load, scratch_dir, scratch_path
 from basis_spark.session import spread_width
 from basis_spark.pipeline import Graph
 from basis_spark.registry import register
@@ -196,18 +196,11 @@ def reactive_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     processes ONLY the new block; the rollup node appends per-increment
     PARTIALS (the reference's accumulator pattern) and the final read
     merges them — so the result must equal the one-shot full recompute
-    the oracle runs. applicationId-scoped block store: built once per
+    the oracle runs. Session-scoped block store: built once per
     session, replayed reads after."""
-    import os
-
-    from basis_spark.io import scratch_dir
     from basis_spark.reactive import Reactor
 
-    base = os.path.join(
-        scratch_dir("reactive"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
-    r = Reactor(spark, base)
+    r = Reactor(spark, scratch_path(spark, "reactive", sf_dir))
     r.source("raw")
     r.node(
         "enriched",
@@ -856,13 +849,12 @@ def pipeline_lakehouse_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     append — the property reproducible training runs need."""
     import json as _json
 
-    from basis_spark.operators.scans import _sf_scratch
     from basis_spark.operators.table_log import (
         _commit,
         _live_objects,
     )
 
-    table_dir = _sf_scratch(spark, "txn_log_curation", sf_dir)
+    table_dir = scratch_path(spark, "txn_log_curation", sf_dir)
 
     def curate(df: DataFrame) -> DataFrame:
         toks = F.split("text", " ")

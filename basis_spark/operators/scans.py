@@ -16,8 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from basis_spark.io import load, scratch_dir
+from basis_spark.io import load, scratch_dir, scratch_path
 from basis_spark.registry import register
+from basis_spark.session import memo
 
 
 @register(
@@ -90,20 +91,6 @@ def source_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(_RECORDS, _RECORDS_SCHEMA)
 
 
-def _sf_scratch(spark: SparkSession, subdir: str, sf_dir: str) -> str:
-    """applicationId-scoped scratch path for a per-SF derived dataset —
-    the ONE way operators in this module build scratch paths. Always
-    embeds the appId: a shared path + mode('overwrite') lets a
-    concurrent process (pytest alongside a sweep) delete files this
-    session is mid-read on. That race was fixed piecemeal per call site
-    in r4/r5 (ADVICE r3; commits 2bf7d32, 2dcb641) and two helpers were
-    missed — this helper makes the isolation invariant structural."""
-    return os.path.join(
-        scratch_dir(subdir),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
-
-
 _CSV_SCHEMA = (
     "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING"
 )
@@ -116,7 +103,7 @@ _CSV_SCHEMA = (
 def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # basis `import_csv` + CSV storage format: write CSV, read back typed.
     # Java Double.toString round-trips exactly, so values hash-match parquet.
-    out = _sf_scratch(spark, "csv_roundtrip", sf_dir)
+    out = scratch_path(spark, "csv_roundtrip", sf_dir)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
@@ -133,27 +120,26 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Partitioned parquet sink (hive-style) then read back with partition column.
-    out = _sf_scratch(spark, "parquet_roundtrip", sf_dir)
+    out = scratch_path(spark, "parquet_roundtrip", sf_dir)
     ev = load(spark, sf_dir, "events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out)
     return back.select("event_id", "ts", "user_id", "value", "props", "event_type")
 
 
-_dpp_written: set[str] = set()
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """events written hive-partitioned by event_type (write-once per
-    process; fixtures are immutable). This is the layout a 100 TB event
+    session; fixtures are immutable). This is the layout a 100 TB event
     lake uses — partition column drives pruning for every reader."""
-    out = _sf_scratch(spark, "events_parted", sf_dir)
-    if out not in _dpp_written:
+
+    def write() -> str:
+        out = scratch_path(spark, "events_parted", sf_dir)
         load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
             "event_type"
         ).parquet(out)
-        _dpp_written.add(out)
-    return out
+        return out
+
+    return memo(spark, ("events_parted", os.path.abspath(sf_dir)), write)
 
 
 @register(
@@ -287,7 +273,7 @@ def source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON lines storage format (basis records-on-disk). Schema applied on
     # read: JSON carries no types, exactly like the CSV path.
-    out = _sf_scratch(spark, "json_roundtrip", sf_dir)
+    out = scratch_path(spark, "json_roundtrip", sf_dir)
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     nat.write.mode("overwrite").json(out)
     return spark.read.schema("n_nationkey long, n_name string, n_regionkey long").json(out)
@@ -300,7 +286,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ORC storage format (the other columnar sink Spark ships natively);
     # types round-trip without a declared schema.
-    out = _sf_scratch(spark, "orc_roundtrip", sf_dir)
+    out = scratch_path(spark, "orc_roundtrip", sf_dir)
     sup = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -324,7 +310,7 @@ def schema_infer_conform(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs. Conforming is explicit casts, so drift between inferred and
     declared types is a visible plan step, not a silent coercion.
     """
-    out = _sf_scratch(spark, "infer_conform", sf_dir)
+    out = scratch_path(spark, "infer_conform", sf_dir)
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     nat.write.mode("overwrite").option("header", True).csv(out)
     inferred = spark.read.option("header", True).option("inferSchema", True).csv(out)
@@ -355,9 +341,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_filemeta_written: set[str] = set()
-
-
 @register(
     "scan_file_metadata",
     oracle="""
@@ -373,17 +356,20 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake — "which files fed this training shard" — with zero extra scan
     cost (the struct is populated from split metadata, not data pages).
 
-    The layout is written once per process with repartition(event_type),
+    The layout is written once per session with repartition(event_type),
     which hash-routes each partition value to exactly one task, so the
     oracle can pin n_files = 1 per partition — and the distinct-count
     would catch a layout regression (e.g. dropping the repartition would
     produce one file per (task, value) pair)."""
-    out = _sf_scratch(spark, "events_filemeta", sf_dir)
-    if out not in _filemeta_written:
+
+    def write() -> str:
+        out = scratch_path(spark, "events_filemeta", sf_dir)
         load(spark, sf_dir, "events").repartition("event_type").write.mode(
             "overwrite"
         ).partitionBy("event_type").parquet(out)
-        _filemeta_written.add(out)
+        return out
+
+    out = memo(spark, ("events_filemeta", os.path.abspath(sf_dir)), write)
     back = spark.read.parquet(out)
     return (
         back.select(
@@ -398,9 +384,6 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("file_name").cast("int").alias("n_files"),
         )
     )
-
-
-_compacted_written: set[str] = set()
 
 
 @register(
@@ -426,19 +409,15 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched. At 100 TB the same job runs per partition-dir with the
     target count = dir_bytes / 128 MB, and the repartition shuffle is
     the unavoidable cost of re-clustering."""
-    # applicationId-scoped scratch (like source_jdbc): the process-local
-    # written-guard can't see a concurrent pytest/oracle_sweep process,
-    # which could otherwise overwrite small/big mid-read (ADVICE r3).
-    out = os.path.join(
-        scratch_dir("compact"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
-    small, big = os.path.join(out, "small"), os.path.join(out, "big")
-    if out not in _compacted_written:
-        ev = load(spark, sf_dir, "events")
-        ev.repartition(32).write.mode("overwrite").parquet(small)
+
+    def write() -> tuple[str, str]:
+        out = scratch_path(spark, "compact", sf_dir)
+        small, big = os.path.join(out, "small"), os.path.join(out, "big")
+        load(spark, sf_dir, "events").repartition(32).write.mode("overwrite").parquet(small)
         spark.read.parquet(small).repartition(2).write.mode("overwrite").parquet(big)
-        _compacted_written.add(out)
+        return small, big
+
+    small, big = memo(spark, ("compacted", os.path.abspath(sf_dir)), write)
 
     def stats(path: str, phase: str) -> DataFrame:
         df = spark.read.parquet(path)
@@ -482,13 +461,8 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     import csv as _csv
 
     # Atomic write (temp + rename): an interrupted run must not leave a
-    # partial rows.csv that the exists-guard would then reuse forever
-    # (ADVICE r3). applicationId-scoped like every other exists-guarded
-    # scratch (r4 verdict item 6): concurrent sessions never share it.
-    out = os.path.join(
-        scratch_dir("csv_permissive"),
-        f"rows_{spark.sparkContext.applicationId}.csv",
-    )
+    # partial rows.csv that the exists-guard would then reuse forever.
+    out = scratch_path(spark, "csv_permissive", tag="rows", ext=".csv")
     if not os.path.exists(out):
         tmp = f"{out}.tmp.{os.getpid()}"
         with open(tmp, "w", newline="") as fh:
@@ -549,13 +523,10 @@ def ts_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _schema_evolution_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Two file generations of the events lake: gen=0 predates the
-    event_type column, gen=1 carries it. applicationId-scoped scratch,
+    event_type column, gen=1 carries it. Session-scoped scratch,
     guarded write; shared by scan_schema_evolution_merge and
     schema_drift_report."""
-    out = os.path.join(
-        scratch_dir("schema_evolution"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    out = scratch_path(spark, "schema_evolution", sf_dir)
     done = os.path.join(out, "_done")
     if not os.path.exists(done):
         ev = load(spark, sf_dir, "events")
@@ -617,11 +588,8 @@ def incremental_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFram
     dropped them — that distinction is the whole operator. At 100 TB
     dynamic overwrite scopes the commit to the touched partitions, so
     backfill cost tracks the correction, not the table.
-    applicationId-scoped scratch, guarded."""
-    out = os.path.join(
-        scratch_dir("backfill"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    Session-scoped scratch, guarded."""
+    out = scratch_path(spark, "backfill", sf_dir)
     done = os.path.join(out, "_done")
     if not os.path.exists(done):
         ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
@@ -971,10 +939,7 @@ def source_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded-newline fields), read back typed."""
     import csv as _csv
 
-    out = os.path.join(
-        scratch_dir("csv_multiline"),
-        f"rows_{spark.sparkContext.applicationId}.csv",
-    )
+    out = scratch_path(spark, "csv_multiline", tag="rows", ext=".csv")
     if not os.path.exists(out):
         tmp = f"{out}.tmp.{os.getpid()}"
         with open(tmp, "w", newline="") as fh:
@@ -1027,10 +992,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (unlike multiLine CSV), so a single huge log file still
     parallelizes; compression choice (splittable bzip2/zstd-seekable
     vs unsplittable gzip) is the real 100 TB lever, documented here."""
-    out = os.path.join(
-        scratch_dir("text_lines"),
-        f"rows_{spark.sparkContext.applicationId}.txt",
-    )
+    out = scratch_path(spark, "text_lines", tag="rows", ext=".txt")
     if not os.path.exists(out):
         tmp = f"{out}.tmp.{os.getpid()}"
         with open(tmp, "w") as fh:
@@ -1101,11 +1063,7 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     acctbal-cents %+013d. Cents are floor(bal*100) so the roundtrip is
     integer-exact (no double-rounding-mode trap between engines).
     """
-    out = os.path.join(
-        scratch_dir("fixed_width"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out = scratch_path(spark, "fixed_width", sf_dir)
     if not os.path.exists(out):
         cust = load(spark, sf_dir, "customer").select(
             F.concat(
@@ -1162,7 +1120,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    out = _sf_scratch(spark, "pysink_jsonl", sf_dir)
+    out = scratch_path(spark, "pysink_jsonl", sf_dir)
 
     class _Msg(WriterCommitMessage):
         def __init__(self, tmp: str):
@@ -1251,10 +1209,7 @@ def scan_gzip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     zstd/bzip2 when within-file splits are required."""
     import gzip
 
-    out = os.path.join(
-        scratch_dir("gzip_text"),
-        f"rows_{spark.sparkContext.applicationId}.txt.gz",
-    )
+    out = scratch_path(spark, "gzip_text", tag="rows", ext=".txt.gz")
     if not os.path.exists(out):
         tmp = out + f".tmp.{os.getpid()}"
         with gzip.open(tmp, "wt") as fh:
@@ -1291,10 +1246,7 @@ def source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     and many."""
     import json as _json
 
-    out = os.path.join(
-        scratch_dir("json_multiline"),
-        f"payload_{spark.sparkContext.applicationId}.json",
-    )
+    out = scratch_path(spark, "json_multiline", tag="payload", ext=".json")
     if not os.path.exists(out):
         tmp = out + f".tmp.{os.getpid()}"
         with open(tmp, "w") as fh:
@@ -1445,7 +1397,7 @@ def scan_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, and the reason typed structs beat JSON strings for hot
     fields (json_variant_extract's trade-off documented from the other
     side)."""
-    out = _sf_scratch(spark, "events_nested", sf_dir)
+    out = scratch_path(spark, "events_nested", sf_dir)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         ev = load(spark, sf_dir, "events")
         nested = ev.select(
@@ -1579,10 +1531,7 @@ def source_csv_sniffed_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing would triple the column count and mangle every value)."""
     import csv as _csv
 
-    out = os.path.join(
-        scratch_dir("csv_sniffed"),
-        f"rows_{spark.sparkContext.applicationId}.csv",
-    )
+    out = scratch_path(spark, "csv_sniffed", tag="rows", ext=".csv")
     if not os.path.exists(out):
         tmp = f"{out}.tmp.{os.getpid()}"
         with open(tmp, "w", newline="") as fh:

@@ -30,9 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_spark.io import load
+from basis_spark.io import load, scratch_path
 from basis_spark.registry import register
-from basis_spark.operators.scans import _sf_scratch
 
 _COLS = ["o_orderkey", "o_custkey", "o_totalprice"]
 
@@ -92,7 +91,7 @@ def _build_base_objects(spark: SparkSession, sf_dir: str) -> str:
     p0+p1 in a single job (the parity column is dropped from the data
     files by partitionBy, so file contents match the old per-filter
     writes), p2 is one cheap local read of p1."""
-    base = _sf_scratch(spark, "txn_base", sf_dir)
+    base = scratch_path(spark, "txn_base", sf_dir)
     done = os.path.join(base, "_objects_complete")
     if os.path.exists(done):
         return base
@@ -137,7 +136,7 @@ def _build_table(spark: SparkSession, sf_dir: str, subdir: str = "txn_log") -> s
     the commit log is written per table instance. An update in this
     format is remove(old object) + add(rewritten object); p1's bytes
     are never touched, which is exactly why v0 stays readable."""
-    table_dir = _sf_scratch(spark, subdir, sf_dir)
+    table_dir = scratch_path(spark, subdir, sf_dir)
     if os.path.exists(os.path.join(table_dir, "log", "00000001.json")):
         return table_dir
     base = _build_base_objects(spark, sf_dir)
@@ -601,7 +600,7 @@ def table_log_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, fails the purity column or the row counts. Everything
     data-sized is one shuffle + one scan; the log work is KB-scale
     metadata."""
-    table_dir = _sf_scratch(spark, "txn_log_opt", sf_dir)
+    table_dir = scratch_path(spark, "txn_log_opt", sf_dir)
     if not os.path.exists(os.path.join(table_dir, "log", "00000001.json")):
         # Fragment ingest layout in ONE partitioned write (the old form
         # ran 8 filtered scan+write jobs — guide §1.2, one pass not
@@ -1002,7 +1001,7 @@ def _build_skipping_table(spark: SparkSession, sf_dir: str) -> str:
     the per-file statistics Delta/Iceberg record at write time so
     readers can prune files from the LOG, before any footer or data
     byte is touched."""
-    table_dir = _sf_scratch(spark, "txn_skip", sf_dir)
+    table_dir = scratch_path(spark, "txn_skip", sf_dir)
     if os.path.exists(os.path.join(table_dir, "log", "00000000.json")):
         return table_dir
     orders = load(spark, sf_dir, "orders").select(*_COLS, "o_orderpriority")
@@ -1140,7 +1139,7 @@ def table_log_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-isolation (cloning + diverging didn't change the source's
     live set)."""
     src = _build_table(spark, sf_dir)
-    clone = _sf_scratch(spark, "txn_clone", sf_dir)
+    clone = scratch_path(spark, "txn_clone", sf_dir)
     if not os.path.exists(os.path.join(clone, "log", "00000001.json")):
         live = _live_objects(src)  # [files/p0 (even), files/p2 (odd x2)]
         rel = [os.path.relpath(p, clone) for p in live]

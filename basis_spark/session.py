@@ -14,11 +14,45 @@ right default on a 1000-executor cluster reading 100 TB:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import os
+from contextlib import contextmanager
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Every session-scoped derived value (fixture DataFrames, indexes, edge
+# lists, written scratch layouts), keyed (applicationId, kind, *rest).
+# Keyed by applicationId, not id(spark): CPython can reuse a stopped
+# session's id() for a new one, which would hand back DataFrames bound
+# to the dead session.
+_memo: dict[tuple, object] = {}
+
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
+    """build() once per (session, key); later calls with an equal key in
+    the same session return the stored value. key[0] names the kind of
+    value, which forget() drops by. Nothing is stored when build raises,
+    so a failed build runs again on the next call. Threads that miss
+    together may each build; the first value stored is the one every
+    caller gets."""
+    k = (spark.sparkContext.applicationId, *key)
+    try:
+        return _memo[k]
+    except KeyError:
+        return _memo.setdefault(k, build())
+
+
+def forget(*kinds: str) -> None:
+    """Drop the memo entries of these kinds in every session, and
+    unpersist the DataFrames they hold, also those inside tuples."""
+    for k in [k for k in _memo if k[1] in kinds]:
+        value = _memo.pop(k)
+        for df in value if isinstance(value, tuple) else (value,):
+            if isinstance(df, DataFrame):
+                try:
+                    df.unpersist()
+                except Exception:  # a stopped session's DataFrame
+                    pass
 
 
 def default_parallelism() -> int:
@@ -41,17 +75,12 @@ def spread_width(n32: int) -> int:
 def get_spark(app_name: str = "basis-spark", cpus: int | None = None) -> SparkSession:
     """Create (or fetch) the shared tuned SparkSession."""
     n = cpus or default_parallelism()
-    # Shuffle-partition override for A/B experiments (r9 verdict #2a:
-    # re-test bench-profile partition counts with order control). The
-    # default stays 2x cores — also the right starting point on a real
-    # cluster, where AQE's coalescing absorbs the initial number.
-    shuffle_p = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(2 * n))
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         # memory only applies if we are the one launching the JVM
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.sql.shuffle.partitions", shuffle_p)
+        .config("spark.sql.shuffle.partitions", str(2 * n))
         .config("spark.default.parallelism", str(2 * n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

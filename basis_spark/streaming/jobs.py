@@ -12,7 +12,6 @@ is what keeps state-store size proportional to the window, not history.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import time
@@ -21,7 +20,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_dir
+from basis_spark.io import load, scratch_dir, scratch_path
 
 
 def split_events_to_chunks(
@@ -30,19 +29,11 @@ def split_events_to_chunks(
     """Write events as n ordered parquet chunk files; returns (dir, batch_df).
 
     Chunks are split on event_id (arrival order) — each chunk is one
-    basis-style block/increment. Scratch is applicationId-keyed so
-    concurrent sessions never race on the _done guard.
+    basis-style block/increment. Scratch is session-scoped so
+    concurrent sessions never race on the _done guard, and tagged with
+    n_chunks so a call with a different count gets its own layout.
     """
-    # Key = basename + abspath digest + n_chunks + appId: basename alone
-    # would serve /a/sf0.1's chunks for /b/sf0.1, and a later call with
-    # a different n_chunks would silently get the cached layout.
-    apath = os.path.abspath(sf_dir.rstrip("/"))
-    digest = hashlib.md5(apath.encode()).hexdigest()[:8]
-    out = os.path.join(
-        scratch_dir("stream_chunks"),
-        f"{os.path.basename(apath)}_{digest}_c{n_chunks}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out = scratch_path(spark, "stream_chunks", sf_dir, f"c{n_chunks}")
     ev = load(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(out, "_done")):
         n = ev.count()
@@ -84,13 +75,9 @@ def split_events_to_chunks_shuffled(
     files oldest-modification-first (latestFirst=false), so with
     maxFilesPerTrigger=1 the micro-batch sequence IS `delivery` — the
     adversarial reordering harness for the watermark tests. Scratch is
-    applicationId-keyed (fresh per session, no cross-process clashes)."""
+    session-scoped (fresh per session, no cross-process clashes)."""
     src, _ = split_events_to_chunks(spark, sf_dir)
-    tag = "-".join(map(str, delivery))
-    out = os.path.join(
-        scratch_dir("stream_chunks_ooo"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{tag}_{spark.sparkContext.applicationId}",
-    )
+    out = scratch_path(spark, "stream_chunks_ooo", sf_dir, "-".join(map(str, delivery)))
     if not os.path.exists(os.path.join(out, "_done")):
         base = time.time()
         for pos, chunk in enumerate(delivery):

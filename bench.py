@@ -301,10 +301,10 @@ def main() -> None:
     # whole-stage-codegen shape that will be timed is compiled and
     # JIT'd, and every parquet footer is page-cache-warm, before the
     # clock starts. ~4 s once per process.
-    from basis_spark.operators.llm import clear_minhash_caches
+    from basis_spark.session import forget
 
     t0 = time.perf_counter()
-    clear_minhash_caches()
+    forget("minhash_bands", "minhash_candidates", "ngram_shingles")
     for _key in BENCH_KEYS.values():
         QUERIES[_key](spark, SF_DIR).count()
     _note(
@@ -407,10 +407,8 @@ def main() -> None:
             # for the cold plan (the old warm-up only exercised the
             # memoized warm path), and with only 3 samples that
             # contaminated run dragged the median.
-            from basis_spark.operators.llm import clear_minhash_caches
-
             def _cold():
-                clear_minhash_caches()
+                forget("minhash_bands", "minhash_candidates", "ngram_shingles")
                 QUERIES[key](spark, SF_DIR).collect()
 
             _cold()  # untimed cold warm-up: codegen/JVM JIT for the cold plan

@@ -62,7 +62,7 @@ STATEFUL_KEYS = [
     "reactive_propagate",
     "stream_reactive_bridge",
     # every other key that materializes scratch state (write.mode /
-    # _sf_scratch audit, r9) — sources that re-land fixture data,
+    # scratch_path audit, r9) — sources that re-land fixture data,
     # bucketed-table setup, metrics observers, curation pipelines
     "join_bucketed",
     "observe_pipeline_metrics",

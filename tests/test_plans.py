@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from basis_spark.io import load
+from basis_spark.io import load, scratch_path
 from basis_spark.operators import joins, scalars, scans, windows
 from tests.conftest import SF_ORACLE
 
@@ -134,7 +134,7 @@ def test_partition_filter_prunes_partitioned_sink(spark):
     # hive-partitioned sink: reading one partition value must show a
     # partition filter at scan time.
     scans.sink_parquet_roundtrip(spark, SF_ORACLE)  # ensures sink exists
-    path = scans._sf_scratch(spark, "parquet_roundtrip", SF_ORACLE)
+    path = scratch_path(spark, "parquet_roundtrip", SF_ORACLE)
     df = spark.read.parquet(path).filter(F.col("event_type") == "click")
     plan = _plan(df)
     assert "PartitionFilters" in plan
@@ -166,7 +166,7 @@ def test_partitioned_sink_prunes_on_read(spark):
     filter on the partition column shows up as PartitionFilters in the
     scan, and non-matching partition dirs are never read."""
     scans.sink_parquet_roundtrip(spark, SF_ORACLE).count()  # ensure written
-    out = scans._sf_scratch(spark, "parquet_roundtrip", SF_ORACLE)
+    out = scratch_path(spark, "parquet_roundtrip", SF_ORACLE)
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
     plan = _plan(back)
     pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
@@ -605,7 +605,7 @@ def test_bench_query_exchange_budget(spark):
         "dedup_near_minhash": 5,    # banded candidates + id-only re-join
         "agg_conditional_pivot": 1, # one partial->final agg exchange
     }
-    from basis_spark.operators.llm import clear_minhash_caches
+    from basis_spark.session import forget
 
     over = {}
     for key, budget in BUDGET.items():
@@ -614,7 +614,7 @@ def test_bench_query_exchange_budget(spark):
             # eager localCheckpoints that truncate lineage; measure the
             # COLD plan (the one bench times) or the count is an
             # artifact of whichever test warmed the memo first
-            clear_minhash_caches()
+            forget("minhash_bands", "minhash_candidates", "ngram_shingles")
         df = QUERIES[key](spark, SF_ORACLE)
         plan = df._jdf.queryExecution().executedPlan().toString()
         n = len(re.findall(r"\bExchange\b", plan))

@@ -1024,12 +1024,12 @@ def test_clone_shallow_is_zero_copy_and_isolated(spark):
     was (isolation)."""
     import os
 
+    from basis_spark.io import scratch_path
     from basis_spark.operators.table_log import _build_table, _live_objects
-    from basis_spark.operators.scans import _sf_scratch
 
     QUERIES["table_log_clone_shallow"](spark, SF_ORACLE).collect()
     src = _build_table(spark, SF_ORACLE)
-    clone = _sf_scratch(spark, "txn_clone", SF_ORACLE)
+    clone = scratch_path(spark, "txn_clone", SF_ORACLE)
     src_live = {os.path.realpath(p) for p in _live_objects(src)}
     clone_live = {os.path.realpath(p) for p in _live_objects(clone)}
     shared = src_live & clone_live
@@ -1857,7 +1857,7 @@ def test_schema_enforcement_rejects_without_committing(spark):
     conforming append must be readable in the new snapshot."""
     import os
 
-    from basis_spark.operators.scans import _sf_scratch
+    from basis_spark.io import scratch_path
     from basis_spark.operators.table_log import _COLS, _live_objects, _read_log
 
     rows = {r["batch_name"]: r for r in QUERIES["table_log_schema_enforcement"](spark, SF_ORACLE).collect()}
@@ -1865,7 +1865,7 @@ def test_schema_enforcement_rejects_without_committing(spark):
     assert rows["drifted_type"]["status"] == "rejected"
     assert rows["conforming"]["status"] == "committed"
     assert rows["conforming"]["version_after"] == 2
-    table_dir = _sf_scratch(spark, "txn_enforce", SF_ORACLE)
+    table_dir = scratch_path(spark, "txn_enforce", SF_ORACLE)
     versions = [rec["version"] for rec in _read_log(table_dir)]
     assert versions == [0, 1, 2]  # exactly ONE append landed
     files = os.listdir(os.path.join(table_dir, "files"))

@@ -1,0 +1,72 @@
+"""Session scope of derived data: the memo in basis_spark/session.py and
+the scratch names from basis_spark/io.scratch_path."""
+
+from __future__ import annotations
+
+import os
+from pathlib import Path
+
+import pyarrow.parquet as pq
+import pytest
+
+from basis_spark.io import load
+from basis_spark.operators.scans import scan_file_metadata
+from basis_spark.session import forget, memo
+from tests.conftest import SF_SMALL
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def test_same_basename_sf_dirs_get_their_own_scratch(spark, tmp_path):
+    """Two SF dirs with one basename in one session: each must be
+    answered from its own data, not from the first dir's layout."""
+    other = tmp_path / "sf0.001"
+    other.mkdir()
+    src = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    pq.write_table(src.slice(0, 100), str(other / "events.parquet"))
+    for sf_dir, n in ((SF_SMALL, src.num_rows), (str(other), 100)):
+        total = sum(r["n_rows"] for r in scan_file_metadata(spark, sf_dir).collect())
+        assert total == n, sf_dir
+
+
+def test_memo_builds_once_and_forget_unpersists(spark):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3).persist()
+
+    first = memo(spark, ("test_scope_kind", 1), build)
+    assert memo(spark, ("test_scope_kind", 1), build) is first
+    assert len(calls) == 1
+    memo(spark, ("test_scope_kind", 2), build)  # another key builds
+    assert len(calls) == 2
+
+    fixture = load(spark, SF_SMALL, "region")
+    forget("test_scope_kind")
+    assert first.is_cached is False
+    again = memo(spark, ("test_scope_kind", 1), build)
+    assert again is not first and len(calls) == 3
+    assert load(spark, SF_SMALL, "region") is fixture  # other kinds survive
+    forget("test_scope_kind")
+
+
+def test_memo_stores_nothing_when_build_raises(spark):
+    def fail():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        memo(spark, ("test_scope_fail",), fail)
+    assert memo(spark, ("test_scope_fail",), lambda: "built") == "built"
+    forget("test_scope_fail")
+
+
+def test_only_session_and_io_read_the_application_id():
+    """Session scoping stays structural: every other module goes
+    through session.memo or io.scratch_path."""
+    readers = sorted(
+        str(p.relative_to(REPO))
+        for p in (REPO / "basis_spark").rglob("*.py")
+        if "sparkContext.applicationId" in p.read_text()
+    )
+    assert readers == ["basis_spark/io.py", "basis_spark/session.py"]

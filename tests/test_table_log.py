@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from basis_spark.io import scratch_path
 from basis_spark.operators import table_log
 from tests.conftest import SF_ORACLE
 
@@ -68,7 +69,7 @@ def test_merge_cow_leaves_unmatched_objects_untouched(spark):
     (same bytes, no rewrite), while p0 is replaced and an insert object
     appears."""
     table_log.table_log_merge_cow(spark, SF_ORACLE).count()  # builds v2
-    table_dir = table_log._sf_scratch(spark, "txn_log_merge", SF_ORACLE)
+    table_dir = scratch_path(spark, "txn_log_merge", SF_ORACLE)
     names = [os.path.basename(p) for p in table_log._live_objects(table_dir)]
     assert "p2" in names, "untouched object must survive under its old path"
     assert "p0" not in names, "matched object must be replaced"
@@ -83,7 +84,7 @@ def test_checkpoint_replay_skips_folded_commits(spark):
     replay. Full replay must still work (a checkpoint is never the
     source of truth)."""
     table_log.table_log_checkpoint(spark, SF_ORACLE).count()  # builds all
-    table_dir = table_log._sf_scratch(spark, "txn_log_ckpt", SF_ORACLE)
+    table_dir = scratch_path(spark, "txn_log_ckpt", SF_ORACLE)
     live_full = table_log._live_objects(table_dir)
     live_ckpt, replayed = table_log._live_objects_ckpt(table_dir)
     assert sorted(live_full) == sorted(live_ckpt)
@@ -100,7 +101,7 @@ def test_schema_evolution_never_rewrites_old_objects(spark):
     footprint (no rewrite), post-evolution rows carry the column, old
     rows surface NULL."""
     df = table_log.table_log_schema_evolution(spark, SF_ORACLE)
-    table_dir = table_log._sf_scratch(spark, "txn_log_schema", SF_ORACLE)
+    table_dir = scratch_path(spark, "txn_log_schema", SF_ORACLE)
     names = [os.path.basename(p) for p in table_log._live_objects(table_dir)]
     assert set(names) == {"p0", "p2", "s2"}
     rows = df.collect()
@@ -115,7 +116,7 @@ def test_vacuum_deletes_only_unreferenced_and_is_idempotent(spark):
     second pass. Time travel past the floor must now fail — the
     documented retention trade."""
     table_log.table_log_vacuum(spark, SF_ORACLE).count()
-    table_dir = table_log._sf_scratch(spark, "txn_log_vacuum", SF_ORACLE)
+    table_dir = scratch_path(spark, "txn_log_vacuum", SF_ORACLE)
     files = sorted(os.listdir(os.path.join(table_dir, "files")))
     assert files == ["p0", "p2"], files
     assert table_log._vacuum(table_dir, retain_from_version=1) == []
