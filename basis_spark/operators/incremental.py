@@ -302,25 +302,27 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous aggregate (hypertable-style rollup), maintained
     incrementally: events arrive as three high-watermark increments;
-    each increment contributes a PARTIAL hourly aggregate written as an
-    append-only block (never rewriting earlier blocks); the serving
-    query merges partials (sum of counts, sum of sums). The oracle is
-    the full recompute over all events — incremental maintenance must
-    be indistinguishable from it.
+    each increment contributes a PARTIAL hourly aggregate fed as the
+    next block of a one-source Reactor (append-only, never rewriting
+    earlier blocks); the serving query merges partials (sum of counts,
+    sum of sums). The oracle is the full recompute over all events —
+    incremental maintenance must be indistinguishable from it.
 
     100 TB shape: partial aggregates are tiny relative to raw events
     (bounded by hours x types), so each refresh shuffles only the new
     increment; the merge re-agg reads blocks, not history.
     """
-    import glob
-    import os
     import shutil
+
+    from basis_spark.reactive import Reactor
 
     ev = load(spark, sf_dir, "events")
     # Session-scoped: an unscoped path + the rmtree below would delete
     # blocks a concurrent process is mid-read on.
     base = scratch_path(spark, "rollup_incr", sf_dir)
     shutil.rmtree(base, ignore_errors=True)  # idempotent per call
+    r = Reactor(spark, base)
+    r.source("partials")
     n = ev.count()
     per = (n + 2) // 3
     for i in range(3):
@@ -330,9 +332,8 @@ def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial = inc.groupBy(
             F.date_trunc("hour", "ts").alias("h"), "event_type"
         ).agg(F.count(F.lit(1)).alias("pn"), F.sum("value").alias("psum"))
-        partial.write.parquet(os.path.join(base, f"block={i}"))
-    blocks = spark.read.parquet(*glob.glob(os.path.join(base, "block=*")))
-    return blocks.groupBy("h", "event_type").agg(
+        r.feed("partials", partial)
+    return r.read("partials").groupBy("h", "event_type").agg(
         F.sum("pn").alias("n"), F.round(F.sum("psum"), 2).alias("sum_value")
     )
 

@@ -1064,7 +1064,7 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact (no double-rounding-mode trap between engines).
     """
     out = scratch_path(spark, "fixed_width", sf_dir)
-    if not os.path.exists(out):
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
         cust = load(spark, sf_dir, "customer").select(
             F.concat(
                 F.lpad(F.col("c_custkey").cast("string"), 10, "0"),

@@ -8,6 +8,10 @@ The reference's model, re-expressed on Spark:
 - Graph + Environment.produce(node)          → Graph.produce(name):
   topological resolution of upstream nodes, each materialized lazily —
   the "DAG execution" is Catalyst's logical plan; we never collect.
+  `topo_order` is also the propagation order of reactive.Reactor,
+  whose nodes are the same `Node` records.
+- BlockLog (immutable blocks)                 → Graph.materialize,
+  which appends through reactive.Reactor's block store.
 - Incremental consumption (metadata DB high-watermark) →
   HighWatermarkState over a monotone column, persisted as JSON.
 - accumulator / dedupe_keep_latest            → accumulate(),
@@ -25,10 +29,11 @@ import itertools
 import json
 import os
 import re
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 _graph_counter = itertools.count()
@@ -267,6 +272,33 @@ class Node:
     inputs: list[str] = field(default_factory=list)
 
 
+def topo_order(nodes: dict[str, Node], roots: list[str] | None = None) -> list[str]:
+    """Names of `roots` (default: every node) and all their upstream
+    nodes, each once, every node after its inputs. Raises ValueError on
+    a cycle. The check runs on the active DFS path, not on a visited
+    set: a diamond (one upstream feeding two inputs of a node) is the
+    normal shape in the node-graph model, not a cycle."""
+    order: list[str] = []
+    done: set[str] = set()
+    path: set[str] = set()
+
+    def visit(n: str) -> None:
+        if n in done:
+            return
+        if n in path:
+            raise ValueError(f"cycle detected at node {n!r}")
+        path.add(n)
+        for u in nodes[n].inputs:
+            visit(u)
+        path.discard(n)
+        done.add(n)
+        order.append(n)
+
+    for n in nodes if roots is None else roots:
+        visit(n)
+    return order
+
+
 class Graph:
     """A tiny declarative node graph: python nodes and SQL-template nodes."""
 
@@ -323,76 +355,54 @@ class Graph:
             g.sql_node(nd["name"], nd["sql"], list(nd.get("inputs", [])))
         return g
 
-    def produce(
-        self,
-        name: str,
-        _path: set[str] | None = None,
-        _memo: dict[str, DataFrame] | None = None,
-    ) -> DataFrame:
-        """Resolve upstream nodes (topologically) and return the node's
-        DataFrame. Lazy: nothing materializes until an action runs.
-
-        Cycle detection is PATH-based (node removed from the active path
-        once its subtree resolves): a visited-set would flag any diamond
-        DAG — one upstream feeding two inputs of the same node — as a
-        false cycle, and diamonds are the normal shape in the node-graph
-        model. Produced DataFrames are memoized per produce() call so a
-        shared upstream is resolved once, not once per path.
-        """
-        path = _path if _path is not None else set()
-        memo = _memo if _memo is not None else {}
-        if name in memo:
-            return memo[name]
-        if name in path:
-            raise ValueError(f"cycle detected at node {name!r}")
-        path.add(name)
-        node = self._nodes[name]
-        ups = [self.produce(u, path, memo) for u in node.inputs]
-        path.discard(name)
-        if node.sql is not None:
-            # Register inputs under graph-namespaced view names and rewrite
-            # the node SQL to reference them, so concurrent graphs (or an
-            # unrelated temp view with a node's name) can't cross-resolve.
-            mapping = {}
-            for uname, udf_ in zip(node.inputs, ups):
-                view = f"{self._ns}{uname}"
-                udf_.createOrReplaceTempView(view)
-                mapping[uname] = view
-            df = self.spark.sql(_rewrite_table_refs(node.sql, mapping, node.name))
-        else:
-            df = node.fn(*ups)
-        memo[name] = df
-        return df
-
+    def produce(self, name: str) -> DataFrame:
+        """Resolve the upstream cone of `name` in topological order, each
+        node once, and return the node's DataFrame. Lazy: nothing
+        materializes until an action runs."""
+        dfs: dict[str, DataFrame] = {}
+        for n in topo_order(self._nodes, [name]):
+            node = self._nodes[n]
+            ups = [dfs[u] for u in node.inputs]
+            if node.sql is not None:
+                # Register inputs under graph-namespaced view names and rewrite
+                # the node SQL to reference them, so concurrent graphs (or an
+                # unrelated temp view with a node's name) can't cross-resolve.
+                mapping = {}
+                for uname, udf_ in zip(node.inputs, ups):
+                    view = f"{self._ns}{uname}"
+                    udf_.createOrReplaceTempView(view)
+                    mapping[uname] = view
+                dfs[n] = self.spark.sql(_rewrite_table_refs(node.sql, mapping, node.name))
+            else:
+                dfs[n] = node.fn(*ups)
+        return dfs[name]
 
     def materialize(self, name: str, base_dir: str) -> dict:
-        """Produce a node and persist its output as an immutable block
-        (the reference's Environment.produce + BlockLog/FunctionLog):
-        writes `base_dir/<node>/block=<n>/` parquet — blocks are
-        append-only, a re-run adds block=n+1, never mutates — plus a
-        run-log line in `base_dir/<node>/log.jsonl` (node, block, rows,
-        wall seconds, ISO timestamp). Returns the log entry."""
-        import datetime
-        import glob
-        import json
-        import time
+        """Produce a node and append its output as the next immutable
+        block of `base_dir/<node>/` in the Reactor's block store (the
+        reference's Environment.produce + BlockLog/FunctionLog): blocks
+        are append-only and publish atomically, and the node's first
+        block pins its schema, so a later output with other columns or
+        types raises ValueError and writes nothing. Adds a run-log line
+        to `base_dir/<node>/log.jsonl` (node, block, rows, wall seconds,
+        ISO timestamp) and returns that entry."""
+        # Lazy: reactive.py imports this module, and the registry import
+        # should not load reactive.py.
+        from basis_spark.reactive import Reactor
 
-        out_dir = os.path.join(base_dir, name)
-        block_n = len(glob.glob(os.path.join(out_dir, "block=*")))
-        block_dir = os.path.join(out_dir, f"block={block_n}")
         t0 = time.time()
-        df = self.produce(name)
-        df.write.mode("errorifexists").parquet(block_dir)
-        rows = self.spark.read.parquet(block_dir).count()
+        r = Reactor(self.spark, base_dir)
+        r.source(name)
+        obs = Observation("rows")
+        block = r.feed(name, self.produce(name).observe(obs, F.count(F.lit(1)).alias("n")))
         entry = {
             "node": name,
-            "block": block_n,
-            "rows": rows,
+            "block": block,
+            "rows": obs.get["n"],
             "wall_s": round(time.time() - t0, 3),
             "ts": datetime.datetime.now(datetime.timezone.utc).isoformat(),
         }
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, "log.jsonl"), "a") as f:
+        with open(os.path.join(base_dir, name, "log.jsonl"), "a") as f:
             f.write(json.dumps(entry) + "\n")
         return entry
 

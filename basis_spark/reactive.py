@@ -23,7 +23,10 @@ Model (mirrors the reference's block/stream semantics):
 - `poll()` runs one propagation pass level by level (a node's level is
   one more than its deepest input's; sources are level 0) — a new
   source block flows through the whole downstream cone in a single
-  pass. `run_until_idle()` polls until a pass moves no data.
+  pass.
+- Nodes are `pipeline.Node` records ordered by `pipeline.topo_order`,
+  the graph core `pipeline.Graph` uses. This block store also backs
+  `Graph.materialize` and the `rollup_incremental` key.
 
 Scale notes: an increment is read as a plain parquet scan of just the
 new block dirs (partition-pruned by construction — old blocks are never
@@ -45,32 +48,26 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
-from dataclasses import dataclass, field
 from glob import glob
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-
-@dataclass
-class _RNode:
-    name: str
-    fn: Callable[..., DataFrame] | None = None  # None => source
-    inputs: list[str] = field(default_factory=list)
+from basis_spark.pipeline import Node, topo_order
 
 
 class Reactor:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
-        self._nodes: dict[str, _RNode] = {}
+        self._nodes: dict[str, Node] = {}  # fn None => source
         self._schemas: dict[str, StructType] = {}
         os.makedirs(base_dir, exist_ok=True)
 
     # ---------------------------------------------------- wiring ----
     def source(self, name: str) -> None:
-        self._nodes[name] = _RNode(name=name)
+        self._nodes[name] = Node(name)
 
     def node(self, name: str, fn: Callable[..., DataFrame], inputs: list[str]) -> None:
         """Declare a transform node: on each pass that finds new blocks
@@ -83,7 +80,7 @@ class Reactor:
         missing = [u for u in inputs if u not in self._nodes]
         if missing:
             raise ValueError(f"node {name!r}: unknown inputs {missing}")
-        self._nodes[name] = _RNode(name=name, fn=fn, inputs=inputs)
+        self._nodes[name] = Node(name, fn=fn, inputs=inputs)
 
     # ---------------------------------------------------- storage ----
     def _dir(self, name: str) -> str:
@@ -212,31 +209,13 @@ class Reactor:
         return self._scan(name, blocks) if blocks else None
 
     # ------------------------------------------------- propagation ----
-    def _topo(self) -> list[str]:
-        order: list[str] = []
-        seen: set[str] = set()
-
-        def visit(n: str, path: tuple[str, ...]) -> None:
-            if n in seen:
-                return
-            if n in path:
-                raise ValueError(f"cycle at {n!r}")
-            for u in self._nodes[n].inputs:
-                visit(u, path + (n,))
-            seen.add(n)
-            order.append(n)
-
-        for n in self._nodes:
-            visit(n, ())
-        return order
-
     def _levels(self) -> list[list[str]]:
         """Transform nodes grouped by depth: a source is depth 0, any
         other node one more than its deepest input. Nodes of one level
         never feed each other."""
         depth: dict[str, int] = {}
         levels: list[list[str]] = []
-        for n in self._topo():
+        for n in topo_order(self._nodes):
             nd = self._nodes[n]
             if nd.fn is None:
                 depth[n] = 0
@@ -308,13 +287,6 @@ class Reactor:
         if err is not None:
             raise err
         return {n: r for (n, _), r in zip(work, results)}
-
-    def run_until_idle(self, max_polls: int = 100) -> int:
-        """Poll until a pass moves nothing; returns number of passes."""
-        for i in range(max_polls):
-            if not self.poll():
-                return i
-        raise RuntimeError(f"not idle after {max_polls} polls")
 
     # ------------------------------------------------------ daemon ----
     # The reference runs change propagation as a PERSISTENT service, not

@@ -241,6 +241,26 @@ def test_graph_materialize_blocks(spark, tmp_path):
     # both blocks still readable (immutability)
     b0 = spark.read.parquet(os.path.join(base, "by_status", "block=0"))
     assert b0.count() == 3
+
+
+def test_graph_materialize_refuses_schema_drift(spark, tmp_path):
+    """A node's first block pins its schema: materializing a same-named
+    node with other columns raises and publishes nothing."""
+    import pytest
+
+    base = str(tmp_path)
+    nation = load(spark, SF_SMALL, "nation")
+    g1 = pipeline.Graph(spark)
+    g1.source("out", nation.select("n_nationkey", "n_name"))
+    assert g1.materialize("out", base)["block"] == 0
+    g2 = pipeline.Graph(spark)
+    g2.source("out", nation.select("n_regionkey"))
+    with pytest.raises(ValueError, match="schema"):
+        g2.materialize("out", base)
+    assert not (tmp_path / "out" / "block=1").exists()
+    assert not [p for p in os.listdir(tmp_path / "out") if p.startswith("_staging")]
+
+
 def test_money_mean_sign_aware_half_up(spark, duck):
     """_money_mean_sql must round a decimal midpoint half AWAY FROM
     ZERO in BOTH engines (r10 advice: the old floor(m+0.5) form sent

@@ -4,13 +4,14 @@ the scratch names from basis_spark/io.scratch_path."""
 from __future__ import annotations
 
 import os
+import shutil
 from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
 
-from basis_spark.io import load
-from basis_spark.operators.scans import scan_file_metadata
+from basis_spark.io import load, scratch_path
+from basis_spark.operators.scans import scan_file_metadata, source_fixed_width
 from basis_spark.session import forget, memo
 from tests.conftest import SF_SMALL
 
@@ -70,3 +71,14 @@ def test_only_session_and_io_read_the_application_id():
         if "sparkContext.applicationId" in p.read_text()
     )
     assert readers == ["basis_spark/io.py", "basis_spark/session.py"]
+
+
+def test_fixed_width_rewrites_a_scratch_dir_left_without_success(spark, tmp_path):
+    """A write that fails after Spark created the output dir leaves it
+    without _SUCCESS; the next call must rewrite it, not read 0 rows."""
+    sf_dir = tmp_path / "sf0.001"
+    sf_dir.mkdir()
+    shutil.copy(os.path.join(SF_SMALL, "customer.parquet"), sf_dir)
+    os.makedirs(scratch_path(spark, "fixed_width", str(sf_dir)))
+    n = load(spark, SF_SMALL, "customer").count()
+    assert source_fixed_width(spark, str(sf_dir)).count() == n

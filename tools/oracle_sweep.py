@@ -111,7 +111,10 @@ def main() -> int:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    # DuckDB's default limit is 80% of RAM, too much beside Spark's JVM
+    # in one process: cap it at half of physical memory.
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    con = duckdb.connect(config={"memory_limit": f"{half_mb}MB"})
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
