@@ -234,29 +234,19 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS through the SQL front-end (this key pins the SQL
-    surface; agg_rollup/agg_cube pin the DataFrame API). Per-call
-    unique view names + drop-after-analysis: fixed names race across
-    concurrent harness threads with different sf_dirs (same convention
-    as sql_recursive_closure)."""
-    import uuid
-
-    sfx = uuid.uuid4().hex[:12]
-    vc, vn = f"gs_customer_{sfx}", f"gs_nation_{sfx}"
-    load(spark, sf_dir, "customer").createOrReplaceTempView(vc)
-    load(spark, sf_dir, "nation").createOrReplaceTempView(vn)
-    df = spark.sql(
-        f"""
+    surface; agg_rollup/agg_cube pin the DataFrame API)."""
+    return spark.sql(
+        """
         SELECT c_mktsegment, n_name,
                CAST(grouping(c_mktsegment) AS BIGINT) AS g_seg,
                CAST(grouping(n_name) AS BIGINT) AS g_nat,
                count(*) AS n, round(sum(c_acctbal), 2) AS bal
-        FROM {vc} JOIN {vn} ON c_nationkey = n_nationkey
+        FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
         GROUP BY GROUPING SETS ((c_mktsegment), (n_name), ())
-        """
+        """,
+        customer=load(spark, sf_dir, "customer"),
+        nation=load(spark, sf_dir, "nation"),
     )
-    spark.catalog.dropTempView(vc)
-    spark.catalog.dropTempView(vn)
-    return df
 
 
 # Collections must be sorted — bag order is engine-dependent (SURVEY App. B5).

@@ -1006,17 +1006,9 @@ def sql_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outer GROUP BY takes min hops. The recursive member is an
     edge-sized join per level — the same per-round cost contract as
     graph_pagerank's iterations; the data-sized stage is only the
-    lag-pair edge extraction. Executed through spark.sql over a temp
-    view: this operator exists to pin the SQL-string surface, not the
+    lag-pair edge extraction. Executed through spark.sql over bound
+    frames: this operator exists to pin the SQL-string surface, not the
     DataFrame API."""
-    import uuid
-
-    ev = load(spark, sf_dir, "events")
-    # Per-call unique view name: applicationId alone is shared by every
-    # thread in the app, so concurrent calls (different sf_dirs) would
-    # race on createOrReplaceTempView and read each other's table.
-    vname = "events_rc_" + uuid.uuid4().hex[:12]
-    ev.createOrReplaceTempView(vname)
     # r12 (guide §1.2/§3.3): the edges CTE used to be INLINED into the
     # recursive member, so EVERY UnionLoop iteration re-ran the
     # data-sized window + distinct over the full events table (the
@@ -1030,30 +1022,29 @@ def sql_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # outer min) is character-identical, so levels and min_hops are
     # unchanged; the SQL-string surface the key exists to pin remains
     # the executed form.
-    edges = spark.sql(f"""
+    edges = spark.sql(
+        """
         SELECT DISTINCT src, dst FROM (
             SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
                    event_type AS dst
-            FROM {vname}) t
+            FROM {events}) t
         WHERE src IS NOT NULL AND src <> dst
-    """).localCheckpoint(eager=False)
-    ename = "edges_rc_" + uuid.uuid4().hex[:12]
-    edges.createOrReplaceTempView(ename)
-    df = spark.sql(f"""
+        """,
+        events=load(spark, sf_dir, "events"),
+    ).localCheckpoint(eager=False)
+    return spark.sql(
+        """
         WITH RECURSIVE reach(src, dst, depth) AS (
-            SELECT src, dst, 1 FROM {ename}
+            SELECT src, dst, 1 FROM {edges}
             UNION ALL
             SELECT /*+ BROADCAST(e) */ r.src, e.dst, r.depth + 1
-            FROM reach r JOIN {ename} e ON r.dst = e.src
+            FROM reach r JOIN {edges} e ON r.dst = e.src
             WHERE r.depth < 3 AND r.src <> e.dst)
         SELECT src, dst, CAST(min(depth) AS INT) AS min_hops
         FROM reach GROUP BY src, dst
-    """)
-    # The plan is fully analyzed at spark.sql() time, so the views can
-    # be dropped immediately — no catalog leak, no name left to race on.
-    spark.catalog.dropTempView(vname)
-    spark.catalog.dropTempView(ename)
-    return df
+        """,
+        edges=edges,
+    )
 
 
 @register(

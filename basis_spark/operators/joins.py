@@ -456,18 +456,18 @@ def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     same physical shape as win_row_number_topk, written the way a SQL
     user would.
     """
-    load(spark, sf_dir, "nation").createOrReplaceTempView("lat_nation")
-    load(spark, sf_dir, "supplier").createOrReplaceTempView("lat_supplier")
     return spark.sql(
         """
         SELECT n.n_name, top.s_name, top.s_acctbal
-        FROM lat_nation n, LATERAL (
+        FROM {nation} n, LATERAL (
             SELECT s_name, round(s_acctbal, 2) AS s_acctbal
-            FROM lat_supplier s
+            FROM {supplier} s
             WHERE s.s_nationkey = n.n_nationkey
             ORDER BY s.s_acctbal DESC, s.s_suppkey
             LIMIT 1) top
-        """
+        """,
+        nation=load(spark, sf_dir, "nation"),
+        supplier=load(spark, sf_dir, "supplier"),
     )
 
 

@@ -12,6 +12,7 @@ and nothing materializes between nodes.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -20,18 +21,6 @@ from basis_spark.io import load, scratch_dir, scratch_path
 from basis_spark.session import spread_width
 from basis_spark.pipeline import Graph
 from basis_spark.registry import register
-
-
-def _sf_tag(sf_dir: str) -> str:
-    """View-name suffix for temp views keyed to a fixture dir. Includes
-    an abspath digest, not just the basename: /a/sf0.1 and /b/sf0.1
-    must not collide when two harnesses share one session (the same
-    same-basename-different-path class source_jdbc fixed in r5)."""
-    import hashlib
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return f"{base}_{digest}"
 
 
 @register(
@@ -445,19 +434,18 @@ SQL_NODE_TEMPLATE = """
 )
 def sql_template_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL node with template parameters — the basis SQL-node surface
-    (Jinja-templated SQL over bound inputs) mapped to Spark: inputs
-    register as session-scoped temp views, the template binds table
-    names and scalar params, and spark.sql() hands the string to the
-    SAME Catalyst pipeline the DataFrame API feeds — a SQL node and a
-    DataFrame node compose freely in one plan (pushdown crosses the
-    boundary). View names are suffixed per sf_dir so concurrent
-    harnesses can't collide."""
-    tag = _sf_tag(sf_dir)
-    o_view, c_view = f"node_orders_{tag}", f"node_customer_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(o_view)
-    load(spark, sf_dir, "customer").createOrReplaceTempView(c_view)
+    (Jinja-templated SQL over bound inputs) mapped to Spark: the
+    template's keyword arguments bind input frames and scalar params,
+    and spark.sql() hands the string to the SAME Catalyst pipeline the
+    DataFrame API feeds — a SQL node and a DataFrame node compose
+    freely in one plan (pushdown crosses the boundary). Each input gets
+    a fresh view name for the one call, dropped once the query is
+    analyzed, so concurrent harnesses can't collide."""
     return spark.sql(
-        SQL_NODE_TEMPLATE.format(orders=o_view, customer=c_view, min_total=100000)
+        SQL_NODE_TEMPLATE,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
+        min_total=100000,
     )
 
 
@@ -480,19 +468,17 @@ def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache across parameter values. Templates choose table NAMES;
     parameters choose VALUES — a production SQL node needs both, which
     is why the two keys exist separately."""
-    tag = _sf_tag(sf_dir)
-    view = f"param_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         SELECT o_orderpriority,
                count(*) AS n,
                round(max(o_totalprice), 2) AS max_price
-        FROM {view}
+        FROM {orders}
         WHERE o_totalprice BETWEEN :lo AND :hi AND o_orderstatus = :status
         GROUP BY o_orderpriority
         """,
         args={"lo": 150000, "hi": 400000, "status": "F"},
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -626,17 +612,15 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (one hash aggregate; no extra projection stages). The oracle
     hand-expands the chain, proving the inlining is semantics-
     preserving."""
-    tag = _sf_tag(sf_dir)
-    view = f"lca_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         SELECT o_orderpriority,
                round(sum(o_totalprice), 2) AS revenue,
                round(revenue / 1000.0, 4) AS revenue_k,
                round(revenue_k * 0.1, 4) AS commission_k
-        FROM {view} GROUP BY o_orderpriority
-        """
+        FROM {orders} GROUP BY o_orderpriority
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -684,17 +668,15 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface with zero physical cost; the value is contract parity
     with the reference's query layer, where analysts write the DuckDB
     idiom and expect identical inference."""
-    tag = _sf_tag(sf_dir)
-    view = f"gba_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
         f"""
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n,
                {_money_mean_sql("o_totalprice", 2)} AS avg_price
-        FROM {view}
+        FROM {{orders}}
         GROUP BY ALL
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -715,20 +697,23 @@ def sql_identifier_binding(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed VALUE binding; here: identifier binding, where a hostile
     name like 'customer; DROP TABLE x' fails to parse as an identifier
     instead of executing). Both the table and the grouping column are
-    bound."""
-    tag = _sf_tag(sf_dir)
-    view = f"idb_customer_{tag}"
+    bound. The table name is what gets bound, so this key keeps an
+    explicit view: one per call, dropped once the query is analyzed."""
+    view = f"idb_customer_{uuid.uuid4().hex}"
     load(spark, sf_dir, "customer").createOrReplaceTempView(view)
-    return spark.sql(
-        f"""
-        SELECT IDENTIFIER(:grp),
-               count(*) AS n,
-               {_money_mean_sql("c_acctbal", 4)} AS avg_bal
-        FROM IDENTIFIER(:tbl)
-        GROUP BY IDENTIFIER(:grp)
-        """,
-        args={"tbl": view, "grp": "c_mktsegment"},
-    )
+    try:
+        return spark.sql(
+            f"""
+            SELECT IDENTIFIER(:grp),
+                   count(*) AS n,
+                   {_money_mean_sql("c_acctbal", 4)} AS avg_bal
+            FROM IDENTIFIER(:tbl)
+            GROUP BY IDENTIFIER(:grp)
+            """,
+            args={"tbl": view, "grp": "c_mktsegment"},
+        )
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 @register(
@@ -919,28 +904,23 @@ def sql_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     readable multi-window queries; both functions compile into ONE
     Window physical operator over one partition-by-customer exchange
     (shared sort — the whole point of naming the spec)."""
-    tag = _sf_tag(sf_dir)
-    view = f"winclause_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT o_custkey,
-                   o_orderkey,
-                   round(o_totalprice, 2) AS price,
-                   rank() OVER w AS price_rank,
-                   round(sum(o_totalprice) OVER w2, 2) AS run_spend
-            FROM {view}
-            WHERE o_custkey <= 200
-            WINDOW w AS (PARTITION BY o_custkey
-                         ORDER BY o_totalprice DESC, o_orderkey),
-                   w2 AS (PARTITION BY o_custkey
-                          ORDER BY o_totalprice DESC, o_orderkey
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """
+        SELECT o_custkey,
+               o_orderkey,
+               round(o_totalprice, 2) AS price,
+               rank() OVER w AS price_rank,
+               round(sum(o_totalprice) OVER w2, 2) AS run_spend
+        FROM {orders}
+        WHERE o_custkey <= 200
+        WINDOW w AS (PARTITION BY o_custkey
+                     ORDER BY o_totalprice DESC, o_orderkey),
+               w2 AS (PARTITION BY o_custkey
+                      ORDER BY o_totalprice DESC, o_orderkey
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        """,
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 @register(
@@ -964,23 +944,18 @@ def sql_pivot_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot-CASE expressions the DataFrame .pivot() API produces (one
     bucket-keyed shuffle, no per-value passes), which is exactly what
     the oracle states in portable ANSI form."""
-    tag = _sf_tag(sf_dir)
-    view = f"pivot_events_{tag}"
-    load(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT bucket, round(click_v, 2) AS click_v,
-                   round(view_v, 2) AS view_v,
-                   round(purchase_v, 2) AS purchase_v
-            FROM (SELECT user_id % 8 AS bucket, event_type, value FROM {view})
-            PIVOT (sum(value)
-                   FOR event_type IN ('click' AS click_v, 'view' AS view_v,
-                                      'purchase' AS purchase_v))
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """
+        SELECT bucket, round(click_v, 2) AS click_v,
+               round(view_v, 2) AS view_v,
+               round(purchase_v, 2) AS purchase_v
+        FROM (SELECT user_id % 8 AS bucket, event_type, value FROM {events})
+        PIVOT (sum(value)
+               FOR event_type IN ('click' AS click_v, 'view' AS view_v,
+                                  'purchase' AS purchase_v))
+        """,
+        events=load(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1006,23 +981,18 @@ def sql_unpivot_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst compiles UNPIVOT to a single Expand node (one pass, rows
     x3, no join, no union re-scan) — strictly better than the oracle's
     portable 3-way UNION ALL spelling at any scale."""
-    tag = _sf_tag(sf_dir)
-    view = f"unpivot_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT g, metric, amount
-            FROM (SELECT o_custkey AS g,
-                         round(sum(o_totalprice), 2) AS total_spend,
-                         round(min(o_totalprice), 2) AS min_spend,
-                         round(max(o_totalprice), 2) AS max_spend
-                  FROM {view} WHERE o_custkey <= 100 GROUP BY o_custkey)
-            UNPIVOT (amount FOR metric IN (total_spend, min_spend, max_spend))
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """
+        SELECT g, metric, amount
+        FROM (SELECT o_custkey AS g,
+                     round(sum(o_totalprice), 2) AS total_spend,
+                     round(min(o_totalprice), 2) AS min_spend,
+                     round(max(o_totalprice), 2) AS max_spend
+              FROM {orders} WHERE o_custkey <= 100 GROUP BY o_custkey)
+        UNPIVOT (amount FOR metric IN (total_spend, min_spend, max_spend))
+        """,
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 @register(
@@ -1051,32 +1021,22 @@ def sql_subquery_surfaces(spark: SparkSession, sf_dir: str) -> DataFrame:
     result reused as a literal — so the query runs as two semi joins
     plus a filter, never a per-row re-execution (the naive nested-loop
     reading of the same SQL)."""
-    tag = _sf_tag(sf_dir)
-    views = {}
-    for t in ("customer", "orders", "nation"):
-        views[t] = f"subq_{t}_{tag}"
-        load(spark, sf_dir, t).createOrReplaceTempView(views[t])
-    try:
-        return spark.sql(
-            f"""
-            SELECT c_mktsegment,
-                   count(*) AS n_customers,
-                   round(sum(c_acctbal), 2) AS sum_bal
-            FROM {views['customer']} c
-            WHERE EXISTS (SELECT 1 FROM {views['orders']} o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderpriority = '1-URGENT')
-              AND c.c_acctbal > (SELECT avg(c_acctbal)
-                                 FROM {views['customer']})
-              AND c.c_nationkey IN (SELECT n_nationkey
-                                    FROM {views['nation']}
-                                    WHERE n_regionkey <= 2)
-            GROUP BY c_mktsegment
-            """
-        )
-    finally:
-        for v in views.values():
-            spark.catalog.dropTempView(v)
+    return spark.sql(
+        """
+        SELECT c_mktsegment,
+               count(*) AS n_customers,
+               round(sum(c_acctbal), 2) AS sum_bal
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
+                      WHERE o.o_custkey = c.c_custkey
+                        AND o.o_orderpriority = '1-URGENT')
+          AND c.c_acctbal > (SELECT avg(c_acctbal) FROM {customer})
+          AND c.c_nationkey IN (SELECT n_nationkey FROM {nation}
+                                WHERE n_regionkey <= 2)
+        GROUP BY c_mktsegment
+        """,
+        **{t: load(spark, sf_dir, t) for t in ("customer", "orders", "nation")},
+    )
 
 
 @register(
@@ -1099,9 +1059,9 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (names), named params (values), IDENTIFIER (identifiers), and now
     whole-statement dynamism — with the same injection-safety story as
     named params, because USING binds typed literals, never splices
-    strings."""
-    tag = _sf_tag(sf_dir)
-    view = f"execimm_lineitem_{tag}"
+    strings. The statement text is data here, so it names an explicit
+    view: one per call, dropped once the query is analyzed."""
+    view = f"execimm_lineitem_{uuid.uuid4().hex}"
     load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
     stmt = (
         f"SELECT l_returnflag, count(*) AS n,"
@@ -1221,24 +1181,19 @@ def sql_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates inside the same partial agg), identical to what the
     conditional-pivot keys get from CASE — the surface is what's being
     pinned, the plan is already optimal."""
-    tag = _sf_tag(sf_dir)
-    view = f"filterclause_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT o_orderpriority,
-                   count(*) AS n_all,
-                   count(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
-                   round(sum(o_totalprice)
-                         FILTER (WHERE o_totalprice > 200000), 2)
-                       AS big_revenue,
-                   CAST(floor(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) / CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) + 0.5) AS BIGINT) / CAST(100 AS DOUBLE) AS avg_open
-            FROM {view} GROUP BY o_orderpriority
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """
+        SELECT o_orderpriority,
+               count(*) AS n_all,
+               count(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
+               round(sum(o_totalprice)
+                     FILTER (WHERE o_totalprice > 200000), 2)
+                   AS big_revenue,
+               CAST(floor(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) / CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) + 0.5) AS BIGINT) / CAST(100 AS DOUBLE) AS avg_open
+        FROM {orders} GROUP BY o_orderpriority
+        """,
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 @register(
@@ -1333,25 +1288,20 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent to the oracle's scalar subquery, but the script form
     lets later statements (loops, IF/ELSE, error handlers) reuse the
     value without re-evaluating it."""
-    tag = _sf_tag(sf_dir)
-    view = f"script_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            BEGIN
-              DECLARE thr DOUBLE;
-              SET thr = (SELECT avg(o_totalprice) FROM {view});
-              SELECT o_orderpriority,
-                     count(*) AS n,
-                     round(sum(o_totalprice), 2) AS rev
-              FROM {view} WHERE o_totalprice > thr
-              GROUP BY o_orderpriority;
-            END
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE thr DOUBLE;
+          SET thr = (SELECT avg(o_totalprice) FROM {orders});
+          SELECT o_orderpriority,
+                 count(*) AS n,
+                 round(sum(o_totalprice), 2) AS rev
+          FROM {orders} WHERE o_totalprice > thr
+          GROUP BY o_orderpriority;
+        END
+        """,
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 @register(
@@ -1928,13 +1878,9 @@ def sql_qualify_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hand-written subquery — with a rank-<=-k predicate it collapses
     to WindowGroupLimit (top-k per group without ranking every row),
     so the sugar costs nothing physical. One exchange on o_custkey."""
-    tag = _sf_tag(sf_dir)
-    view = f"qualify_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(rewrite_qualify(_QUALIFY_DEMO.format(table=view)))
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        rewrite_qualify(_QUALIFY_DEMO), table=load(spark, sf_dir, "orders")
+    )
 
 
 def rewrite_distinct_on(sql: str) -> str:
@@ -2042,13 +1988,9 @@ def sql_distinct_on(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit (rank 1 per group short-circuits before full sort
     materialization) — physically identical to dedupe_keep_latest's
     hand-built window."""
-    tag = _sf_tag(sf_dir)
-    view = f"don_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(rewrite_distinct_on(_DISTINCT_ON_DEMO.format(table=view)))
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        rewrite_distinct_on(_DISTINCT_ON_DEMO), table=load(spark, sf_dir, "orders")
+    )
 
 
 @register(
@@ -2076,23 +2018,18 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     The post-AGGREGATE |> WHERE is the HAVING equivalent (it filters
     aggregate output), demonstrating the dialect's one-keyword-fewer
     composition."""
-    tag = _sf_tag(sf_dir)
-    view = f"pipe_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            FROM {view}
-            |> WHERE o_orderstatus = 'O'
-            |> AGGREGATE count(*) AS n,
-                         round(sum(o_totalprice), 2) AS spend
-               GROUP BY o_orderpriority
-            |> WHERE n > 5
-            |> SELECT o_orderpriority, n, spend
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """
+        FROM {orders}
+        |> WHERE o_orderstatus = 'O'
+        |> AGGREGATE count(*) AS n,
+                     round(sum(o_totalprice), 2) AS spend
+           GROUP BY o_orderpriority
+        |> WHERE n > 5
+        |> SELECT o_orderpriority, n, spend
+        """,
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 @register(
@@ -2117,18 +2054,16 @@ def sql_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     result-compare is order-insensitive; the key exists to pin the
     ANALYZER expansion, and the tiny sorted relation is the posture
     that survives 100 TB)."""
-    tag = _sf_tag(sf_dir)
-    view = f"oba_orders_{tag}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n,
                round(sum(o_totalprice), 2) AS total
-        FROM {view}
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -2147,7 +2082,7 @@ def sql_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     time into an explicit projection, so column pruning still reaches
     the parquet scan (ReadSchema drops the excluded column exactly as
     if it had been listed) — asserted in tests/test_plans.py."""
-    tag = _sf_tag(sf_dir)
-    view = f"sse_docs_{tag}"
-    load(spark, sf_dir, "documents").createOrReplaceTempView(view)
-    return spark.sql(f"SELECT * EXCEPT (text) FROM {view} WHERE doc_id < 50")
+    return spark.sql(
+        "SELECT * EXCEPT (text) FROM {docs} WHERE doc_id < 50",
+        docs=load(spark, sf_dir, "documents"),
+    )

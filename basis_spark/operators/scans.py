@@ -11,6 +11,7 @@ partitioned parallel read — no external DB service needed.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,22 +224,13 @@ def source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale only the URL changes. Derby DOUBLEs are IEEE 754, so values
     hash-match the parquet originals.
     """
-    # Embedded Derby is single-process (file lock on the DB dir): scope
-    # the path per-pid so concurrent harnesses (driver gate + pytest +
-    # sweep) never collide on each other's lock. Keyed by basename PLUS
-    # an abspath digest: two different dirs with the same trailing name
-    # (e.g. /a/sf0.1 and /b/sf0.1) must not share a DB within one
-    # process, or the second overwrite silently feeds the first call's
-    # still-lazy DataFrame the wrong fixture's rows.
-    import hashlib
-
-    apath = os.path.abspath(sf_dir.rstrip("/"))
-    sfx = (
-        os.path.basename(apath).replace(".", "_")
-        + "_"
-        + hashlib.md5(apath.encode()).hexdigest()[:8]
-    )
-    db = os.path.join(scratch_dir("derby"), f"graft_{sfx}_p{os.getpid()}")
+    # Embedded Derby is single-process (file lock on the DB dir): the
+    # session-scoped path keeps concurrent processes (pytest beside an
+    # oracle sweep) off each other's lock, and its sf_dir digest keeps
+    # /a/sf0.1 and /b/sf0.1 apart within one session, where a shared DB
+    # would feed the first call's still-lazy DataFrame the second
+    # fixture's rows.
+    db = scratch_path(spark, "derby", sf_dir)
     url = f"jdbc:derby:{db};create=true"
     drv = "org.apache.derby.jdbc.EmbeddedDriver"
     cust = load(spark, sf_dir, "customer").select(
@@ -1170,14 +1162,18 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception as e:
         if "already" not in str(e).lower():
             raise
-    if not os.path.exists(out) or not any(
-        n.endswith(".jsonl") for n in os.listdir(out)
-    ):
+    # Write once per session, guarded on a marker written after save()
+    # returns: a dir without it may hold only part of a commit's files,
+    # and the sink appends, so it is cleared before the rewrite.
+    marker = os.path.join(out, "_SUCCESS")
+    if not os.path.exists(marker):
+        shutil.rmtree(out, ignore_errors=True)
         load(spark, sf_dir, "customer").select(
             "c_nationkey", "c_acctbal"
         ).write.format("basis_jsonl_sink").mode("append").option(
             "path", out
         ).save()
+        open(marker, "w").close()
     back = spark.read.schema("nationkey long, acctbal double").json(
         os.path.join(out, "*.jsonl")
     )

@@ -130,13 +130,13 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, tok in enumerate(text.split(" ")):
                 yield i, tok
 
-    load(spark, sf_dir, "documents").createOrReplaceTempView("udtf_docs")
     spark.udtf.register("basis_tokenize", Tokenize)
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.token
-        FROM udtf_docs d, LATERAL basis_tokenize(d.text) t
-        """
+        FROM {docs} d, LATERAL basis_tokenize(d.text) t
+        """,
+        docs=load(spark, sf_dir, "documents"),
     )
 
 
@@ -210,13 +210,13 @@ def udtf_explode_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "sid")
         .agg(F.array_sort(F.collect_list("ts")).alias("ts_arr"))
     )
-    per_session.createOrReplaceTempView("udtf_user_sessions")
     spark.udtf.register("basis_session_stats", SessionStats)
     return spark.sql(
         """
         SELECT u.user_id, u.sid, s.n_events, s.dur_seconds
-        FROM udtf_user_sessions u, LATERAL basis_session_stats(u.ts_arr) s
-        """
+        FROM {sessions} u, LATERAL basis_session_stats(u.ts_arr) s
+        """,
+        sessions=per_session,
     )
 
 
@@ -435,24 +435,15 @@ def udtf_table_arg_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self.n:
                 yield self.key, self.n, self.first, self.last, self.n_high
 
-    # Per-call uuid-scoped view, dropped once the plan is analyzed
-    # (spark.sql resolves eagerly) — same convention as udf_pandas
-    # above: a fixed name is a race when two harnesses with different
-    # sf_dirs interleave createOrReplaceTempView and spark.sql().
-    view = f"udtf_events_{uuid.uuid4().hex[:12]}"
-    load(spark, sf_dir, "events").select(
-        "event_type", "ts", "value"
-    ).createOrReplaceTempView(view)
     spark.udtf.register("basis_summarize", Summarize)
-    out = spark.sql(
-        f"""
-        SELECT * FROM basis_summarize(
-            TABLE({view}) PARTITION BY event_type ORDER BY ts
-        )
+    return spark.sql(
         """
+        SELECT * FROM basis_summarize(
+            TABLE({events}) PARTITION BY event_type ORDER BY ts
+        )
+        """,
+        events=load(spark, sf_dir, "events").select("event_type", "ts", "value"),
     )
-    spark.catalog.dropTempView(view)
-    return out
 
 
 @register(
@@ -638,20 +629,17 @@ def udtf_analyze_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
                     round(self.hi, 2),
                 )
 
-    view = f"udtf_profile_{uuid.uuid4().hex[:12]}"
-    load(spark, sf_dir, "orders").select(
-        "o_orderpriority", "o_totalprice"
-    ).createOrReplaceTempView(view)
     spark.udtf.register("basis_profile", udtf(Profile))
-    out = spark.sql(
-        f"""
-        SELECT * FROM basis_profile(
-            TABLE({view}) PARTITION BY (o_orderpriority), 'o_totalprice'
-        )
+    return spark.sql(
         """
+        SELECT * FROM basis_profile(
+            TABLE({orders}) PARTITION BY (o_orderpriority), 'o_totalprice'
+        )
+        """,
+        orders=load(spark, sf_dir, "orders").select(
+            "o_orderpriority", "o_totalprice"
+        ),
     )
-    spark.catalog.dropTempView(view)
-    return out
 
 
 @register(
@@ -685,22 +673,18 @@ def sql_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CREATE OR REPLACE TEMPORARY FUNCTION {fn2}(p DOUBLE, d DOUBLE,"
         f" t DOUBLE) RETURNS DOUBLE RETURN p * (1 - d) * (1 + t)"
     )
-    view = f"sqludf_lineitem_{uuid.uuid4().hex[:10]}"
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT l_returnflag,
-                   count(*) AS n,
-                   round(sum({fn1}(l_extendedprice, l_discount)), 2)
-                       AS disc_revenue,
-                   round(sum({fn2}(l_extendedprice, l_discount, l_tax)), 2)
-                       AS charged
-            FROM {view} GROUP BY l_returnflag
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        f"""
+        SELECT l_returnflag,
+               count(*) AS n,
+               round(sum({fn1}(l_extendedprice, l_discount)), 2)
+                   AS disc_revenue,
+               round(sum({fn2}(l_extendedprice, l_discount, l_tax)), 2)
+                   AS charged
+        FROM {{lineitem}} GROUP BY l_returnflag
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )
 
 
 @register(
@@ -731,22 +715,16 @@ def sql_udf_table_valued(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURNS TABLE(installment INT, amount DOUBLE)
         RETURN SELECT explode(sequence(1, 4)), price / 4"""
     )
-    view = f"sqltvf_orders_{uuid.uuid4().hex[:10]}"
-    load(spark, sf_dir, "orders").filter(
-        F.col("o_orderkey") <= 500
-    ).createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""
-            SELECT t.installment,
-                   count(*) AS n,
-                   round(sum(t.amount), 2) AS total_amount
-            FROM {view} o, LATERAL {fn}(o.o_totalprice) t
-            GROUP BY t.installment
-            """
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        f"""
+        SELECT t.installment,
+               count(*) AS n,
+               round(sum(t.amount), 2) AS total_amount
+        FROM {{orders}} o, LATERAL {fn}(o.o_totalprice) t
+        GROUP BY t.installment
+        """,
+        orders=load(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 500),
+    )
 
 
 @register(
@@ -796,10 +774,10 @@ def udtf_arrow_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     spark.udtf.register("basis_arrow_bander", Bander)
-    view = f"arrowudtf_orders_{uuid.uuid4().hex[:12]}"
-    load(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1000).select(
-        "o_orderkey", "o_totalprice"
-    ).createOrReplaceTempView(view)
-    out = spark.sql(f"SELECT * FROM basis_arrow_bander(TABLE({view}))")
-    spark.catalog.dropTempView(view)
+    out = spark.sql(
+        "SELECT * FROM basis_arrow_bander(TABLE({orders}))",
+        orders=load(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") <= 1000)
+        .select("o_orderkey", "o_totalprice"),
+    )
     return out.withColumn("remainder", F.round("remainder", 2))

@@ -434,25 +434,17 @@ def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-user trailing-window aggregate is the streaming-feature shape
     (rate limiting, rolling engagement) computed batch-side.
     """
-    import uuid
-
-    ev = load(spark, sf_dir, "events")
-    # Per-call unique view, dropped after analysis (fixed names race
-    # across concurrent calls — same convention as sql_recursive_closure).
-    vname = "win_range_interval_" + uuid.uuid4().hex[:12]
-    ev.createOrReplaceTempView(vname)
-    df = spark.sql(
-        f"""
+    return spark.sql(
+        """
         SELECT user_id, event_id,
                count(*) OVER w AS n_1h,
                round(sum(value) OVER w, 2) AS sum_1h
-        FROM {vname}
+        FROM {events}
         WINDOW w AS (PARTITION BY user_id ORDER BY ts
                      RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        """
+        """,
+        events=load(spark, sf_dir, "events"),
     )
-    spark.catalog.dropTempView(vname)
-    return df
 
 
 @register(

@@ -494,13 +494,13 @@ def main() -> None:
                 ),
                 # Kept short (r10 tiny-item: a long JSON line risks the
                 # driver's bounded tail-capture cutting the measurement);
-                # full protocol prose lives in the module docstring +
-                # BENCH_DECOMP.json.
+                # full protocol prose lives in the module docstring;
+                # the per-layer split comes from perfbench's traced run.
                 "baseline_note": (
                     "paired adjacent DuckDB (SURVEY §6 texts, warm "
                     "median-of-5); b11 DuckDB at sf0.01 = 10x data "
-                    "handicap vs Spark cold LSH at sf0.1; decomposition "
-                    "in BENCH_DECOMP.json"
+                    "handicap vs Spark cold LSH at sf0.1; per-layer split "
+                    "via perfbench/run.py --trace 1"
                 ),
                 "bench_profile": {
                     "spark.sql.shuffle.partitions": bench_p or "session",

@@ -137,6 +137,23 @@ def test_graph_views_are_namespaced(spark):
     spark.catalog.dropTempView("src")
 
 
+def test_graph_sql_node_leaves_no_temp_view(spark):
+    """A SQL node's inputs are bound for the one spark.sql call: the
+    session's temp views are the same before and after produce(), and a
+    literal brace in the node SQL reaches Spark as written."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    g = pipeline.Graph(spark)
+    g.source("src", load(spark, SF_SMALL, "nation"))
+    g.sql_node("out", "SELECT count(*) AS n, '{x}' AS s FROM src", inputs=["src"])
+    row = g.produce("out").collect()[0]
+    assert (row["n"], row["s"]) == (load(spark, SF_SMALL, "nation").count(), "{x}")
+    assert temp_views() == before
+
+
 def test_sql_rewrite_only_table_positions(spark):
     """Input-name rewriting must not touch columns, aliases, or string
     literals that share an input node's name (ADVICE r2)."""

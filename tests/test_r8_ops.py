@@ -573,23 +573,17 @@ def test_pipe_syntax_plan_equals_classic(spark):
     """|> is pure syntax: the pipe chain's optimized plan must match
     the classic SELECT's optimized plan (same filters, same aggregate,
     same having) — Catalyst sees one query, two spellings."""
-    from basis_spark.operators.pipelines import _sf_tag
-
     pipe = QUERIES["sql_pipe_syntax"](spark, SF_ORACLE)
-    view = f"pipe_classic_{_sf_tag(SF_ORACLE)}"
-    load(spark, SF_ORACLE, "orders").createOrReplaceTempView(view)
-    try:
-        classic = spark.sql(
-            f"""SELECT o_orderpriority, count(*) AS n,
-                       round(sum(o_totalprice), 2) AS spend
-                FROM {view} WHERE o_orderstatus = 'O'
-                GROUP BY o_orderpriority HAVING count(*) > 5"""
-        )
-        assert sorted(map(tuple, pipe.collect())) == sorted(
-            map(tuple, classic.collect())
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    classic = spark.sql(
+        """SELECT o_orderpriority, count(*) AS n,
+                  round(sum(o_totalprice), 2) AS spend
+           FROM {orders} WHERE o_orderstatus = 'O'
+           GROUP BY o_orderpriority HAVING count(*) > 5""",
+        orders=load(spark, SF_ORACLE, "orders"),
+    )
+    assert sorted(map(tuple, pipe.collect())) == sorted(
+        map(tuple, classic.collect())
+    )
 
 
 def test_growth_accounting_conservation(spark):

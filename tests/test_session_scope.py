@@ -10,8 +10,14 @@ from pathlib import Path
 import pyarrow.parquet as pq
 import pytest
 
+import basis_spark.operators  # noqa: F401  (registers every operator)
 from basis_spark.io import load, scratch_path
-from basis_spark.operators.scans import scan_file_metadata, source_fixed_width
+from basis_spark.operators.scans import (
+    scan_file_metadata,
+    sink_python_datasource,
+    source_fixed_width,
+)
+from basis_spark.registry import QUERIES
 from basis_spark.session import forget, memo
 from tests.conftest import SF_SMALL
 
@@ -82,3 +88,46 @@ def test_fixed_width_rewrites_a_scratch_dir_left_without_success(spark, tmp_path
     os.makedirs(scratch_path(spark, "fixed_width", str(sf_dir)))
     n = load(spark, SF_SMALL, "customer").count()
     assert source_fixed_width(spark, str(sf_dir)).count() == n
+
+
+def test_python_sink_rewrites_a_scratch_dir_left_without_success(spark, tmp_path):
+    """A commit that stopped after renaming some of its files leaves
+    .jsonl parts but no _SUCCESS; the next call must rewrite the dir,
+    not read the partial rows."""
+    sf_dir = tmp_path / "sf0.001"
+    sf_dir.mkdir()
+    shutil.copy(os.path.join(SF_SMALL, "customer.parquet"), sf_dir)
+    out = scratch_path(spark, "pysink_jsonl", str(sf_dir))
+    os.makedirs(out)
+    with open(os.path.join(out, "part-x.jsonl"), "w") as fh:
+        fh.write('{"nationkey": 0, "acctbal": 1.0}\n')
+    n = load(spark, SF_SMALL, "customer").count()
+    assert sum(r["n"] for r in sink_python_datasource(spark, str(sf_dir)).collect()) == n
+
+
+# Keys that run SQL over DataFrames.
+_SQL_OVER_FRAMES = [
+    "sql_template_node",
+    "sql_parameterized_query",
+    "sql_lateral_column_alias",
+    "sql_group_by_all",
+    "sql_identifier_binding",
+    "sql_order_by_all",
+    "sql_star_except",
+    "udtf_explode_tokens",
+    "udtf_explode_sessions",
+    "join_lateral",
+]
+
+
+def test_sql_keys_leave_no_temp_views(spark):
+    """Frames are bound for the one spark.sql call, so building these
+    keys leaves the session's temp views as they were."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    for key in _SQL_OVER_FRAMES:
+        QUERIES[key](spark, SF_SMALL)
+    assert temp_views() == before
