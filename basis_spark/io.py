@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,7 +110,8 @@ def scratch_path(
     a sweep) delete files this session is mid-read on. The 8-hex digest
     of sf_dir's absolute path keeps two SF dirs with one basename apart
     within a session. Without sf_dir (data that does not depend on
-    the fixtures) the name is <tag>_<applicationId><ext>."""
+    the fixtures) the name is <tag>_<applicationId><ext>. Data written
+    once per session goes through scratch_once, which names it here."""
     parts = []
     if sf_dir is not None:
         apath = os.path.abspath(sf_dir)
@@ -117,6 +120,41 @@ def scratch_path(
         parts.append(tag)
     parts.append(spark.sparkContext.applicationId)
     return os.path.join(scratch_dir(subdir), "_".join(parts) + ext)
+
+
+def scratch_once(
+    spark: SparkSession,
+    write: Callable[[str], None],
+    subdir: str,
+    sf_dir: str | None = None,
+    tag: str = "",
+    ext: str = "",
+) -> str:
+    """Write a session-scoped scratch artifact once; returns its path
+    (scratch_path's name for subdir, sf_dir, tag, ext).
+
+    The first call in a session removes whatever is at the path (a file
+    or a dir a failed write left behind), then calls write(path), which
+    writes the artifact straight to path. Later calls with the same name
+    return the path without touching disk. A write that raises stores
+    nothing, so the next call clears the path and writes again. No
+    marker file and no temp-file rename are needed: the applicationId in
+    the name means only this session reads the path, and it reads only
+    after scratch_once returns. memo holds no lock, so two threads must
+    not build one path at once; a write may call scratch_once for
+    another path."""
+
+    def build() -> str:
+        path = scratch_path(spark, subdir, sf_dir, tag, ext)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif os.path.lexists(path):
+            os.remove(path)
+        write(path)
+        return path
+
+    sf_key = None if sf_dir is None else os.path.abspath(sf_dir)
+    return memo(spark, ("scratch", subdir, sf_key, tag, ext), build)
 
 
 def gc_stale_siblings(parent: str, prefix: str, keep: str, ttl_s: int = 86400) -> None:
@@ -129,7 +167,6 @@ def gc_stale_siblings(parent: str, prefix: str, keep: str, ttl_s: int = 86400) -
     longer than any session here lives) are deleted. Age-gated so a
     LIVE concurrent session's scratch is never touched; errors are
     swallowed (another process may be collecting the same dir)."""
-    import shutil
     import time
 
     try:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_path
+from basis_spark.io import load, scratch_once, scratch_path
 from basis_spark.registry import register
 
 HIGH_WATER_EVENT_ID = 5000  # declared high-watermark constant for the batch form
@@ -497,27 +497,25 @@ def stream_reactive_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookkeeping (its checkpoint) while the reactive side owns
     at-most-once per-consumer propagation (its consumption
     watermarks). The accumulated downstream state must equal the batch
-    recompute the oracle runs. Session-scoped block store: built
-    once per session, replayed reads after."""
-    import os
-
+    recompute the oracle runs. The block store is ingested once per
+    session; later calls read it."""
     from basis_spark.reactive import Reactor
     from basis_spark.streaming.jobs import _read_stream, split_events_to_chunks
 
-    base = scratch_path(spark, "reactive_bridge", sf_dir)
-    r = Reactor(spark, base)
-    r.source("raw")
-    r.node(
-        "clicks",
-        lambda inc: inc.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", F.round("value", 2).alias("value")
-        ),
-        ["raw"],
-    )
-    # Completeness marker, not a block-count guard: n_blocks > 0 would
-    # treat a partially-ingested store (prior timed-out run) as done.
-    done_marker = os.path.join(base, "_ingest_done")
-    if not os.path.exists(done_marker):
+    def reactor(base: str) -> Reactor:
+        r = Reactor(spark, base)
+        r.source("raw")
+        r.node(
+            "clicks",
+            lambda inc: inc.filter(F.col("event_type") == "click").select(
+                "event_id", "user_id", F.round("value", 2).alias("value")
+            ),
+            ["raw"],
+        )
+        return r
+
+    def ingest_all(base: str) -> None:
+        r = reactor(base)
         chunk_dir, _ = split_events_to_chunks(spark, sf_dir)
         s = _read_stream(spark, chunk_dir)
 
@@ -536,9 +534,9 @@ def stream_reactive_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
             # it so a retry doesn't race a still-appending ingestor.
             q.stop()
             raise RuntimeError("bridge stream timed out (300s)")
-        with open(done_marker, "w") as fh:
-            fh.write("ok")
-    return r.read("clicks")
+
+    base = scratch_once(spark, ingest_all, "reactive_bridge", sf_dir)
+    return reactor(base).read("clicks")
 
 
 @register(

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_path
+from basis_spark.io import load, scratch_once, scratch_path
 from basis_spark.session import spread_width
 from basis_spark.registry import register
 
@@ -1211,19 +1211,17 @@ def multimodal_tar_shard_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # values. At 100 TB there are many shards: the same gen runs per
     # (shard, member-range) with binaryFile-listed paths.
     import io as _io
-    import os
     import tarfile as _tarfile
 
-    shard = scratch_path(spark, "tar_shards", tag="shard", ext=".tar")
-    if not os.path.exists(shard):
-        tmp = shard + f".tmp.{os.getpid()}"
-        with _tarfile.open(tmp, "w") as tf:
+    def write(shard: str) -> None:
+        with _tarfile.open(shard, "w") as tf:
             for d in range(200):
                 payload = bytes((d * 31 + i * 7) % 256 for i in range(8))
                 info = _tarfile.TarInfo(name=f"{d:06d}.txt")
                 info.size = len(payload)
                 tf.addfile(info, _io.BytesIO(payload))
-        os.replace(tmp, shard)
+
+    shard = scratch_once(spark, write, "tar_shards", tag="shard", ext=".tar")
     ranges = spark.range(0, 200, 25).select(
         F.col("id").alias("lo"), (F.col("id") + 25).alias("hi")
     )

@@ -17,7 +17,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_dir, scratch_path
+from basis_spark.io import load, scratch_dir, scratch_once, scratch_path
 from basis_spark.session import spread_width
 from basis_spark.pipeline import Graph
 from basis_spark.registry import register
@@ -832,14 +832,10 @@ def pipeline_lakehouse_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-able anti-join); the log is KB-scale metadata. Snapshot
     isolation means a reader mid-curation sees v0 or v1, never half an
     append — the property reproducible training runs need."""
-    import json as _json
-
     from basis_spark.operators.table_log import (
         _commit,
         _live_objects,
     )
-
-    table_dir = scratch_path(spark, "txn_log_curation", sf_dir)
 
     def curate(df: DataFrame) -> DataFrame:
         toks = F.split("text", " ")
@@ -853,12 +849,10 @@ def pipeline_lakehouse_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "text", "n_tokens")
         )
 
-    if not os.path.exists(os.path.join(table_dir, "log", "00000001.json")):
+    def write(table_dir: str) -> None:
         docs = load(spark, sf_dir, "documents")
         base = curate(docs.filter(F.col("doc_id") % 4 != 3))
-        base.write.mode("overwrite").parquet(
-            os.path.join(table_dir, "files", "c0")
-        )
+        base.write.parquet(os.path.join(table_dir, "files", "c0"))
         _commit(table_dir, 0, [{"op": "add", "path": "files/c0"}])
 
         live = spark.read.parquet(*_live_objects(table_dir))
@@ -867,13 +861,10 @@ def pipeline_lakehouse_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("text") == F.col("h"),
             "left_anti",
         )
-        inc.write.mode("overwrite").parquet(
-            os.path.join(table_dir, "files", "c1")
-        )
+        inc.write.parquet(os.path.join(table_dir, "files", "c1"))
         _commit(table_dir, 1, [{"op": "add", "path": "files/c1"}])
 
-    with open(os.path.join(table_dir, "log", "00000001.json")) as fh:
-        assert _json.load(fh)["version"] == 1  # both commits landed
+    table_dir = scratch_once(spark, write, "txn_log_curation", sf_dir)
     snap = spark.read.parquet(*_live_objects(table_dir))
     return snap.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -11,15 +11,13 @@ partitioned parallel read — no external DB service needed.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from basis_spark.io import load, scratch_dir, scratch_path
+from basis_spark.io import load, scratch_once, scratch_path
 from basis_spark.registry import register
-from basis_spark.session import memo
 
 
 @register(
@@ -133,14 +131,10 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     session; fixtures are immutable). This is the layout a 100 TB event
     lake uses — partition column drives pruning for every reader."""
 
-    def write() -> str:
-        out = scratch_path(spark, "events_parted", sf_dir)
-        load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(out)
-        return out
+    def write(out: str) -> None:
+        load(spark, sf_dir, "events").write.partitionBy("event_type").parquet(out)
 
-    return memo(spark, ("events_parted", os.path.abspath(sf_dir)), write)
+    return scratch_once(spark, write, "events_parted", sf_dir)
 
 
 @register(
@@ -354,15 +348,12 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     would catch a layout regression (e.g. dropping the repartition would
     produce one file per (task, value) pair)."""
 
-    def write() -> str:
-        out = scratch_path(spark, "events_filemeta", sf_dir)
-        load(spark, sf_dir, "events").repartition("event_type").write.mode(
-            "overwrite"
-        ).partitionBy("event_type").parquet(out)
-        return out
+    def write(out: str) -> None:
+        load(spark, sf_dir, "events").repartition("event_type").write.partitionBy(
+            "event_type"
+        ).parquet(out)
 
-    out = memo(spark, ("events_filemeta", os.path.abspath(sf_dir)), write)
-    back = spark.read.parquet(out)
+    back = spark.read.parquet(scratch_once(spark, write, "events_filemeta", sf_dir))
     return (
         back.select(
             F.regexp_extract(F.col("_metadata.file_path"), r"event_type=([^/]+)/", 1).alias(
@@ -402,14 +393,13 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     target count = dir_bytes / 128 MB, and the repartition shuffle is
     the unavoidable cost of re-clustering."""
 
-    def write() -> tuple[str, str]:
-        out = scratch_path(spark, "compact", sf_dir)
+    def write(out: str) -> None:
         small, big = os.path.join(out, "small"), os.path.join(out, "big")
-        load(spark, sf_dir, "events").repartition(32).write.mode("overwrite").parquet(small)
-        spark.read.parquet(small).repartition(2).write.mode("overwrite").parquet(big)
-        return small, big
+        load(spark, sf_dir, "events").repartition(32).write.parquet(small)
+        spark.read.parquet(small).repartition(2).write.parquet(big)
 
-    small, big = memo(spark, ("compacted", os.path.abspath(sf_dir)), write)
+    out = scratch_once(spark, write, "compact", sf_dir)
+    small, big = os.path.join(out, "small"), os.path.join(out, "big")
 
     def stats(path: str, phase: str) -> DataFrame:
         df = spark.read.parquet(path)
@@ -452,16 +442,13 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     data."""
     import csv as _csv
 
-    # Atomic write (temp + rename): an interrupted run must not leave a
-    # partial rows.csv that the exists-guard would then reuse forever.
-    out = scratch_path(spark, "csv_permissive", tag="rows", ext=".csv")
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp.{os.getpid()}"
-        with open(tmp, "w", newline="") as fh:
+    def write(out: str) -> None:
+        with open(out, "w", newline="") as fh:
             w = _csv.writer(fh)
             for i in range(1000):
                 w.writerow([i, "oops" if i % 97 == 0 else i * 1.5])
-        os.replace(tmp, out)
+
+    out = scratch_once(spark, write, "csv_permissive", tag="rows", ext=".csv")
     schema = "id BIGINT, v DOUBLE, _corrupt_record STRING"
     df = spark.read.schema(schema).option("mode", "PERMISSIVE").option(
         "columnNameOfCorruptRecord", "_corrupt_record"
@@ -515,20 +502,19 @@ def ts_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _schema_evolution_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Two file generations of the events lake: gen=0 predates the
-    event_type column, gen=1 carries it. Session-scoped scratch,
-    guarded write; shared by scan_schema_evolution_merge and
-    schema_drift_report."""
-    out = scratch_path(spark, "schema_evolution", sf_dir)
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
+    event_type column, gen=1 carries it. Written once per session;
+    shared by scan_schema_evolution_merge and schema_drift_report."""
+
+    def write(out: str) -> None:
         ev = load(spark, sf_dir, "events")
-        ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "gen=0"))
+        ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value").write.parquet(
+            os.path.join(out, "gen=0")
+        )
         ev.filter(F.col("event_id") % 2 == 1).select(
             "event_id", "value", "event_type"
-        ).write.mode("overwrite").parquet(os.path.join(out, "gen=1"))
-        open(done, "w").close()
+        ).write.parquet(os.path.join(out, "gen=1"))
+
+    out = scratch_once(spark, write, "schema_evolution", sf_dir)
     return os.path.join(out, "gen=0"), os.path.join(out, "gen=1")
 
 
@@ -580,20 +566,19 @@ def incremental_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFram
     dropped them — that distinction is the whole operator. At 100 TB
     dynamic overwrite scopes the commit to the touched partitions, so
     backfill cost tracks the correction, not the table.
-    Session-scoped scratch, guarded."""
-    out = scratch_path(spark, "backfill", sf_dir)
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
+    Written once per session."""
+
+    def write(out: str) -> None:
         ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+        ev.write.partitionBy("event_type").parquet(out)
         fixed = ev.filter(F.col("event_type") == "click").withColumn(
             "value", F.col("value") * 2
         )
         fixed.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("event_type").parquet(out)
-        open(done, "w").close()
-    back = spark.read.parquet(out)
+
+    back = spark.read.parquet(scratch_once(spark, write, "backfill", sf_dir))
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
@@ -931,10 +916,8 @@ def source_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded-newline fields), read back typed."""
     import csv as _csv
 
-    out = scratch_path(spark, "csv_multiline", tag="rows", ext=".csv")
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp.{os.getpid()}"
-        with open(tmp, "w", newline="") as fh:
+    def write(out: str) -> None:
+        with open(out, "w", newline="") as fh:
             # LF row terminator: univocity (Spark's multiLine parser)
             # normalizes embedded line breaks to the detected record
             # separator, so CRLF rows would silently grow every quoted
@@ -943,7 +926,8 @@ def source_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(300):
                 note = f"line one\nline two {i}" if i % 3 == 0 else f"plain {i}"
                 w.writerow([i, note])
-        os.replace(tmp, out)
+
+    out = scratch_once(spark, write, "csv_multiline", tag="rows", ext=".csv")
     df = spark.read.schema("id BIGINT, note STRING").option(
         "multiLine", "true"
     ).csv(out)
@@ -984,14 +968,13 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (unlike multiLine CSV), so a single huge log file still
     parallelizes; compression choice (splittable bzip2/zstd-seekable
     vs unsplittable gzip) is the real 100 TB lever, documented here."""
-    out = scratch_path(spark, "text_lines", tag="rows", ext=".txt")
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
+
+    def write(out: str) -> None:
+        with open(out, "w") as fh:
             for i in range(400):
                 fh.write(f"evt|{i}|{i * 7 % 100}\n")
-        os.replace(tmp, out)
-    df = spark.read.text(out)
+
+    df = spark.read.text(scratch_once(spark, write, "text_lines", tag="rows", ext=".txt"))
     metric = F.regexp_extract("value", r"^evt\|(\d+)\|(\d+)$", 2).cast("long")
     return df.agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -1055,8 +1038,8 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     acctbal-cents %+013d. Cents are floor(bal*100) so the roundtrip is
     integer-exact (no double-rounding-mode trap between engines).
     """
-    out = scratch_path(spark, "fixed_width", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def write(out: str) -> None:
         cust = load(spark, sf_dir, "customer").select(
             F.concat(
                 F.lpad(F.col("c_custkey").cast("string"), 10, "0"),
@@ -1070,8 +1053,9 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("value")
         )
-        cust.write.mode("overwrite").text(out)
-    raw = spark.read.text(out)
+        cust.write.text(out)
+
+    raw = spark.read.text(scratch_once(spark, write, "fixed_width", sf_dir))
     sign = F.when(F.substring("value", 21, 1) == "-", -1).otherwise(1)
     return raw.select(
         F.substring("value", 1, 10).cast("bigint").alias("c_custkey"),
@@ -1111,8 +1095,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         DataSourceWriter,
         WriterCommitMessage,
     )
-
-    out = scratch_path(spark, "pysink_jsonl", sf_dir)
 
     class _Msg(WriterCommitMessage):
         def __init__(self, tmp: str):
@@ -1162,18 +1144,15 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception as e:
         if "already" not in str(e).lower():
             raise
-    # Write once per session, guarded on a marker written after save()
-    # returns: a dir without it may hold only part of a commit's files,
-    # and the sink appends, so it is cleared before the rewrite.
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+
+    def write(out: str) -> None:
         load(spark, sf_dir, "customer").select(
             "c_nationkey", "c_acctbal"
         ).write.format("basis_jsonl_sink").mode("append").option(
             "path", out
         ).save()
-        open(marker, "w").close()
+
+    out = scratch_once(spark, write, "pysink_jsonl", sf_dir)
     back = spark.read.schema("nationkey long, acctbal double").json(
         os.path.join(out, "*.jsonl")
     )
@@ -1205,14 +1184,12 @@ def scan_gzip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     zstd/bzip2 when within-file splits are required."""
     import gzip
 
-    out = scratch_path(spark, "gzip_text", tag="rows", ext=".txt.gz")
-    if not os.path.exists(out):
-        tmp = out + f".tmp.{os.getpid()}"
-        with gzip.open(tmp, "wt") as fh:
+    def write(out: str) -> None:
+        with gzip.open(out, "wt") as fh:
             for i in range(500):
                 fh.write(f"rec|{i}|{i * 13 % 1000}\n")
-        os.replace(tmp, out)
-    df = spark.read.text(out)
+
+    df = spark.read.text(scratch_once(spark, write, "gzip_text", tag="rows", ext=".txt.gz"))
     metric = F.regexp_extract("value", r"^rec\|(\d+)\|(\d+)$", 2).cast("long")
     return df.agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -1242,16 +1219,15 @@ def source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     and many."""
     import json as _json
 
-    out = scratch_path(spark, "json_multiline", tag="payload", ext=".json")
-    if not os.path.exists(out):
-        tmp = out + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
+    def write(out: str) -> None:
+        with open(out, "w") as fh:
             _json.dump(
                 [{"i": i, "grp": i % 5, "metric": i * 3} for i in range(300)],
                 fh,
                 indent=1,  # pretty-printed: rows span many lines
             )
-        os.replace(tmp, out)
+
+    out = scratch_once(spark, write, "json_multiline", tag="payload", ext=".json")
     df = spark.read.option("multiLine", "true").schema(
         "i long, grp long, metric long"
     ).json(out)
@@ -1393,8 +1369,8 @@ def scan_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, and the reason typed structs beat JSON strings for hot
     fields (json_variant_extract's trade-off documented from the other
     side)."""
-    out = scratch_path(spark, "events_nested", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def write(out: str) -> None:
         ev = load(spark, sf_dir, "events")
         nested = ev.select(
             "event_id",
@@ -1405,8 +1381,9 @@ def scan_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.md5(F.col("props")).alias("blob"),
             ).alias("meta"),
         )
-        nested.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
+        nested.write.parquet(out)
+
+    back = spark.read.parquet(scratch_once(spark, write, "events_nested", sf_dir))
     return back.select((F.col("meta.k") % 10).alias("k_bucket"), "meta.k").groupBy(
         "k_bucket"
     ).agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("sum_k"))
@@ -1527,15 +1504,14 @@ def source_csv_sniffed_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing would triple the column count and mangle every value)."""
     import csv as _csv
 
-    out = scratch_path(spark, "csv_sniffed", tag="rows", ext=".csv")
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp.{os.getpid()}"
-        with open(tmp, "w", newline="") as fh:
+    def write(out: str) -> None:
+        with open(out, "w", newline="") as fh:
             w = _csv.writer(fh, delimiter=";", lineterminator="\n")
             for i in range(200):
                 label = "name" + ", extra" * (i % 3) + f" {i}"
                 w.writerow([i, label, round((i * 13 % 997) / 100.0, 2)])
-        os.replace(tmp, out)
+
+    out = scratch_once(spark, write, "csv_sniffed", tag="rows", ext=".csv")
     sep = sniff_csv_dialect(out)
     df = spark.read.schema("id BIGINT, label STRING, val DOUBLE").option(
         "sep", sep

@@ -26,11 +26,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_path
+from basis_spark.io import load, scratch_once
 from basis_spark.registry import register
 
 _COLS = ["o_orderkey", "o_custkey", "o_totalprice"]
@@ -77,75 +79,68 @@ def _hardlink_tree(src: str, dst: str) -> None:
         tgt = os.path.join(dst, rel) if rel != "." else dst
         os.makedirs(tgt, exist_ok=True)
         for name in files:
-            d = os.path.join(tgt, name)
-            if not os.path.exists(d):
-                os.link(os.path.join(root, name), d)
+            os.link(os.path.join(root, name), os.path.join(tgt, name))
 
 
 def _build_base_objects(spark: SparkSession, sf_dir: str) -> str:
     """Write the three canonical data objects (p0 even / p1 odd /
-    p2 odd repriced x2) ONCE per session. Ten table_log keys build an
-    isolated table instance; before this existed each build re-ran the
-    orders scan + three write jobs (~30 write jobs per sweep session),
-    all producing byte-equivalent objects. One partitioned write lands
-    p0+p1 in a single job (the parity column is dropped from the data
-    files by partitionBy, so file contents match the old per-filter
-    writes), p2 is one cheap local read of p1."""
-    base = scratch_path(spark, "txn_base", sf_dir)
-    done = os.path.join(base, "_objects_complete")
-    if os.path.exists(done):
-        return base
-    files_dir = os.path.join(base, "files")
-    staging = os.path.join(base, "_stage_parity")
-    (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .select(*_COLS, (F.col("o_orderkey") % 2).alias("parity"))
-        .write.mode("overwrite")
-        .partitionBy("parity")
-        .parquet(staging)
-    )
-    os.makedirs(files_dir, exist_ok=True)
-    for parity, obj in ((0, "p0"), (1, "p1")):
-        src = os.path.join(staging, f"parity={parity}")
-        if not os.path.isdir(src):  # degenerate fixture: keep old failure mode
-            raise FileNotFoundError(f"no rows with o_orderkey % 2 = {parity}")
-        os.rename(src, os.path.join(files_dir, obj))
-    # v1's object: reprice the odd-key orders (x2 — exact in binary
-    # floating point, so Spark and DuckDB agree bit-for-bit).
-    spark.read.parquet(os.path.join(files_dir, "p1")).withColumn(
-        "o_totalprice", F.col("o_totalprice") * 2
-    ).select(*_COLS).write.mode("overwrite").parquet(
-        os.path.join(files_dir, "p2")
-    )
-    import shutil
+    p2 odd repriced x2) once per session; every table instance
+    hardlinks them. One partitioned write lands p0+p1 in a single job
+    (partitionBy drops the parity column from the data files), p2 is
+    one cheap local read of p1."""
 
-    shutil.rmtree(staging, ignore_errors=True)
-    tmp = done + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write("ok")
-    os.replace(tmp, done)
-    return base
+    def write(base: str) -> None:
+        files_dir = os.path.join(base, "files")
+        staging = os.path.join(base, "_stage_parity")
+        (
+            load(spark, sf_dir, "orders")
+            .filter(F.col("o_orderstatus") == "F")
+            .select(*_COLS, (F.col("o_orderkey") % 2).alias("parity"))
+            .write.partitionBy("parity")
+            .parquet(staging)
+        )
+        os.makedirs(files_dir)
+        for parity, obj in ((0, "p0"), (1, "p1")):
+            src = os.path.join(staging, f"parity={parity}")
+            if not os.path.isdir(src):  # degenerate fixture: no rows of this parity
+                raise FileNotFoundError(f"no rows with o_orderkey % 2 = {parity}")
+            os.rename(src, os.path.join(files_dir, obj))
+        # v1's object: reprice the odd-key orders (x2 — exact in binary
+        # floating point, so Spark and DuckDB agree bit-for-bit).
+        spark.read.parquet(os.path.join(files_dir, "p1")).withColumn(
+            "o_totalprice", F.col("o_totalprice") * 2
+        ).select(*_COLS).write.parquet(os.path.join(files_dir, "p2"))
+        shutil.rmtree(staging)
+
+    return scratch_once(spark, write, "txn_base", sf_dir)
 
 
-def _build_table(spark: SparkSession, sf_dir: str, subdir: str = "txn_log") -> str:
-    """Materialize the two-commit fixture table once per session
-    (appId-scoped scratch, exists-guarded on the LAST commit so a
-    partially built table is never read as complete). The data objects
-    come from the shared session-scoped base build via hardlink clone;
-    the commit log is written per table instance. An update in this
-    format is remove(old object) + add(rewritten object); p1's bytes
-    are never touched, which is exactly why v0 stays readable."""
-    table_dir = scratch_path(spark, subdir, sf_dir)
-    if os.path.exists(os.path.join(table_dir, "log", "00000001.json")):
-        return table_dir
-    base = _build_base_objects(spark, sf_dir)
-    _hardlink_tree(os.path.join(base, "files"), os.path.join(table_dir, "files"))
-    _commit(table_dir, 0, [{"op": "add", "path": "files/p0"},
-                           {"op": "add", "path": "files/p1"}])
-    _commit(table_dir, 1, [{"op": "remove", "path": "files/p1"},
-                           {"op": "add", "path": "files/p2"}])
-    return table_dir
+def _build_table(
+    spark: SparkSession,
+    sf_dir: str,
+    subdir: str = "txn_log",
+    then: Callable[[str], None] | None = None,
+) -> str:
+    """Materialize the two-commit fixture table once per session. The
+    data objects come from the shared session-scoped base build via
+    hardlink clone; the commit log is written per table instance. An
+    update in this format is remove(old object) + add(rewritten
+    object); p1's bytes are never touched, which is exactly why v0
+    stays readable. A key that mutates its own table instance passes
+    the mutation as then(table_dir): it runs in the same write, so a
+    failed mutation rebuilds the whole table on the next call."""
+
+    def write(table_dir: str) -> None:
+        base = _build_base_objects(spark, sf_dir)
+        _hardlink_tree(os.path.join(base, "files"), os.path.join(table_dir, "files"))
+        _commit(table_dir, 0, [{"op": "add", "path": "files/p0"},
+                               {"op": "add", "path": "files/p1"}])
+        _commit(table_dir, 1, [{"op": "remove", "path": "files/p1"},
+                               {"op": "add", "path": "files/p2"}])
+        if then is not None:
+            then(table_dir)
+
+    return scratch_once(spark, write, subdir, sf_dir)
 
 
 def _read_log(table_dir: str) -> list[dict]:
@@ -351,8 +346,7 @@ def table_log_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lost update, a double-applied update, or a clobbered untouched
     # object is a value mismatch. (+100 and *2 are exact in binary
     # doubles on both engines.)
-    table_dir = _build_table(spark, sf_dir, subdir="txn_log_merge")
-    if not os.path.exists(os.path.join(table_dir, "log", "00000002.json")):
+    def merge(table_dir: str) -> None:
         orders = load(spark, sf_dir, "orders")
         updates = (
             orders.filter(
@@ -364,6 +358,8 @@ def table_log_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
         inserts = orders.filter(F.col("o_orderstatus") == "P").select(*_COLS)
         _merge_cow(spark, table_dir, updates.unionByName(inserts),
                    "o_orderkey", version=2)
+
+    table_dir = _build_table(spark, sf_dir, subdir="txn_log_merge", then=merge)
     return spark.read.parquet(*_live_objects(table_dir)).select(*_COLS)
 
 
@@ -452,18 +448,19 @@ def table_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the v2 snapshot from the orders fixture, so a checkpoint that
     # froze the wrong live set (e.g. included the removed p1) or a
     # replay that skipped v2 is a value/row mismatch.
-    table_dir = _build_table(spark, sf_dir, subdir="txn_log_ckpt")
-    if not os.path.exists(os.path.join(table_dir, "log", "00000002.json")):
+    def checkpoint_then_append(table_dir: str) -> None:
         _write_checkpoint(table_dir, 1)
         inserts = (
             load(spark, sf_dir, "orders")
             .filter(F.col("o_orderstatus") == "P")
             .select(*_COLS)
         )
-        inserts.write.mode("overwrite").parquet(
-            os.path.join(table_dir, "files", "p3")
-        )
+        inserts.write.parquet(os.path.join(table_dir, "files", "p3"))
         _commit(table_dir, 2, [{"op": "add", "path": "files/p3"}])
+
+    table_dir = _build_table(
+        spark, sf_dir, subdir="txn_log_ckpt", then=checkpoint_then_append
+    )
     live, replayed = _live_objects_ckpt(table_dir)
     assert replayed == 1, f"checkpoint not used: replayed {replayed} commits"
     return spark.read.parquet(*live).select(*_COLS)
@@ -494,17 +491,16 @@ def table_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the merged schema in the log metadata instead of re-inferring
     # per read; the contract (old objects never rewritten, old rows
     # NULL-filled) is identical.
-    table_dir = _build_table(spark, sf_dir, subdir="txn_log_schema")
-    if not os.path.exists(os.path.join(table_dir, "log", "00000002.json")):
+    def append_wide(table_dir: str) -> None:
         wide = (
             load(spark, sf_dir, "orders")
             .filter(F.col("o_orderstatus") == "P")
             .select(*_COLS, "o_orderpriority")
         )
-        wide.write.mode("overwrite").parquet(
-            os.path.join(table_dir, "files", "s2")
-        )
+        wide.write.parquet(os.path.join(table_dir, "files", "s2"))
         _commit(table_dir, 2, [{"op": "add", "path": "files/s2"}])
+
+    table_dir = _build_table(spark, sf_dir, subdir="txn_log_schema", then=append_wide)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(*_live_objects(table_dir))
@@ -520,8 +516,6 @@ def _vacuum(table_dir: str, retain_from_version: int) -> list[str]:
     Time travel to versions before the floor breaks BY DESIGN — that
     is the retention trade every production format makes. Idempotent:
     a second vacuum finds nothing unreferenced."""
-    import shutil
-
     versions = [rec["version"] for rec in _read_log(table_dir)]
     referenced: set[str] = set()
     for v in versions:
@@ -600,27 +594,21 @@ def table_log_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, fails the purity column or the row counts. Everything
     data-sized is one shuffle + one scan; the log work is KB-scale
     metadata."""
-    table_dir = scratch_path(spark, "txn_log_opt", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "log", "00000001.json")):
-        # Fragment ingest layout in ONE partitioned write (the old form
-        # ran 8 filtered scan+write jobs — guide §1.2, one pass not
-        # eight); the partition column is dropped from the data files,
-        # so each renamed f{i} dir holds exactly the rows and columns
-        # the per-filter writes produced.
+    def write(table_dir: str) -> None:
+        # Fragment ingest layout in one partitioned write; partitionBy
+        # drops the frag column from the data files.
         staging = os.path.join(table_dir, "_stage_frags")
         (
             load(spark, sf_dir, "orders")
             .filter(F.col("o_orderstatus") == "F")
             .select(*_COLS, (F.col("o_orderkey") % 8).alias("frag"))
-            .write.mode("overwrite")
-            .partitionBy("frag")
+            .write.partitionBy("frag")
             .parquet(staging)
         )
+        os.makedirs(os.path.join(table_dir, "files"))
         frags = []
         for i in range(8):
             rel = f"files/f{i}"
-            os.makedirs(os.path.dirname(os.path.join(table_dir, rel)),
-                        exist_ok=True)
             os.rename(os.path.join(staging, f"frag={i}"),
                       os.path.join(table_dir, rel))
             frags.append(rel)
@@ -630,10 +618,9 @@ def table_log_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # within-partition sort orders them for min/max row-group
         # pruning on the cluster key's range scans. repartition(4, c)
         # puts each cluster wholly in one task, so every renamed z{c}
-        # dir holds ONE part-file (the old form forced it with four
-        # separate repartition(1) write jobs); the (c, o_custkey) sort
-        # satisfies the dynamic-partition writer's required ordering,
-        # so rows land custkey-sorted with no extra sort.
+        # dir holds ONE part-file; the (c, o_custkey) sort satisfies
+        # the dynamic-partition writer's required ordering, so rows
+        # land custkey-sorted with no extra sort.
         full = spark.read.parquet(
             *[os.path.join(table_dir, p) for p in frags]
         )
@@ -643,8 +630,7 @@ def table_log_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             full.withColumn("c", F.pmod("o_custkey", F.lit(4)))
             .repartition(4, "c")
             .sortWithinPartitions("c", "o_custkey")
-            .write.mode("overwrite")
-            .partitionBy("c")
+            .write.partitionBy("c")
             .parquet(zstage)
         )
         for c in range(4):
@@ -652,12 +638,11 @@ def table_log_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(os.path.join(zstage, f"c={c}"),
                       os.path.join(table_dir, rel))
             actions.append({"op": "add", "path": rel})
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(zstage, ignore_errors=True)
+        shutil.rmtree(staging)
+        shutil.rmtree(zstage)
         _commit(table_dir, 1, actions)
 
+    table_dir = scratch_once(spark, write, "txn_log_opt", sf_dir)
     live = _live_objects(table_dir)
     assert len(live) == 4, f"OPTIMIZE left {len(live)} live objects"
     scan = (
@@ -719,15 +704,14 @@ def table_log_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     conflict checking (did the winner remove an object I rewrote?) is
     the remove-set intersection test on replay — merge/delete writers
     run it before retrying; pure appends skip it by construction."""
-    table_dir = _build_table(spark, sf_dir, subdir="txn_log_occ")
-    if not os.path.exists(os.path.join(table_dir, "log", "00000003.json")):
+    def race(table_dir: str) -> None:
         orders = load(spark, sf_dir, "orders")
         a = orders.filter(F.col("o_orderstatus") == "P").select(*_COLS)
         b = orders.filter(
             (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 10 == 0)
         ).select(*_COLS)
-        a.write.mode("overwrite").parquet(os.path.join(table_dir, "files", "w_a"))
-        b.write.mode("overwrite").parquet(os.path.join(table_dir, "files", "w_b"))
+        a.write.parquet(os.path.join(table_dir, "files", "w_a"))
+        b.write.parquet(os.path.join(table_dir, "files", "w_b"))
         # Both writers read the snapshot at v1 and target v2. Writer A
         # wins the link race; writer B MUST see CommitConflict, then
         # retry at the next version.
@@ -738,6 +722,8 @@ def table_log_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         except CommitConflict:
             next_v = max(r["version"] for r in _read_log(table_dir)) + 1
             _commit(table_dir, next_v, [{"op": "add", "path": "files/w_b"}])
+
+    table_dir = _build_table(spark, sf_dir, subdir="txn_log_occ", then=race)
     return spark.read.parquet(*_live_objects(table_dir)).select(*_COLS)
 
 
@@ -763,8 +749,7 @@ def table_log_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     the COW form here is the semantics both paths must agree with,
     and at 100 TB the untouched-object skip is what bounds the cost
     to the predicate's physical footprint."""
-    table_dir = _build_table(spark, sf_dir, subdir="txn_log_del")
-    if not os.path.exists(os.path.join(table_dir, "log", "00000002.json")):
+    def delete(table_dir: str) -> None:
         pred = F.col("o_totalprice") > 300000
         live = _live_objects(table_dir)
         matched_objs = _objects_matching(
@@ -776,7 +761,7 @@ def table_log_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue  # no matches: object stays live untouched
             tgt = spark.read.parquet(obj)
             rel_new = f"files/d2_{i}"
-            tgt.filter(~pred).select(*_COLS).write.mode("overwrite").parquet(
+            tgt.filter(~pred).select(*_COLS).write.parquet(
                 os.path.join(table_dir, rel_new)
             )
             actions.append(
@@ -784,6 +769,8 @@ def table_log_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             actions.append({"op": "add", "path": rel_new})
         _commit(table_dir, 2, actions)
+
+    table_dir = _build_table(spark, sf_dir, subdir="txn_log_del", then=delete)
     return spark.read.parquet(*_live_objects(table_dir)).select(*_COLS)
 
 
@@ -968,18 +955,15 @@ def table_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits, and the live set is v0's 2 objects. Runs on its own
     table instance (txn_restore) so the shared 2-commit fixture table
     other keys replay is never mutated."""
-    table_dir = _build_table(spark, sf_dir, subdir="txn_restore")
-    restore_marker = os.path.join(table_dir, "log", "00000002.json")
-    if not os.path.exists(restore_marker):
+    def restore(table_dir: str) -> None:
         now = {os.path.relpath(p, table_dir) for p in _live_objects(table_dir)}
         v0 = {os.path.relpath(p, table_dir) for p in _live_objects(table_dir, 0)}
         actions = [{"op": "remove", "path": p} for p in sorted(now - v0)] + [
             {"op": "add", "path": p} for p in sorted(v0 - now)
         ]
-        try:
-            _commit(table_dir, 2, actions)
-        except CommitConflict:
-            pass  # a concurrent harness already restored — same target state
+        _commit(table_dir, 2, actions)
+
+    table_dir = _build_table(spark, sf_dir, subdir="txn_restore", then=restore)
     live = _live_objects(table_dir)
     snap = spark.read.parquet(*live).select(*_COLS)
     n_commits = len(_read_log(table_dir))
@@ -1001,48 +985,39 @@ def _build_skipping_table(spark: SparkSession, sf_dir: str) -> str:
     the per-file statistics Delta/Iceberg record at write time so
     readers can prune files from the LOG, before any footer or data
     byte is touched."""
-    table_dir = scratch_path(spark, "txn_skip", sf_dir)
-    if os.path.exists(os.path.join(table_dir, "log", "00000000.json")):
-        return table_dir
-    orders = load(spark, sf_dir, "orders").select(*_COLS, "o_orderpriority")
-    m = orders.agg(F.max("o_custkey").alias("m")).first()["m"]
-    # One partitioned write for all range files (was one filtered
-    # scan+write job per range — guide §1.2); rng counts the interior
-    # range boundaries <= custkey, which reproduces the old per-range
-    # [i*(m+1)//K, (i+1)*(m+1)//K) filters exactly (integer floor-div
-    # boundaries — a float floor(ck*K/(m+1)) misclassifies edge keys
-    # when (m+1) % K != 0). partitionBy drops rng from the data files.
-    bounds = [i * (m + 1) // _SKIP_RANGES for i in range(1, _SKIP_RANGES)]
-    rng = sum(
-        (F.col("o_custkey") >= b).cast("long") for b in bounds
-    )
-    staging = os.path.join(table_dir, "_stage_ranges")
-    (
-        orders.withColumn("rng", rng)
-        .write.mode("overwrite")
-        .partitionBy("rng")
-        .parquet(staging)
-    )
-    actions = []
-    for i in range(_SKIP_RANGES):
-        lo = i * (m + 1) // _SKIP_RANGES
-        hi = (i + 1) * (m + 1) // _SKIP_RANGES
-        rel = f"files/r{i}"
-        os.makedirs(os.path.dirname(os.path.join(table_dir, rel)),
-                    exist_ok=True)
-        src = os.path.join(staging, f"rng={i}")
-        if os.path.isdir(src):
-            os.rename(src, os.path.join(table_dir, rel))
-        else:  # empty range at tiny SF: a zone map may cover no rows
-            os.makedirs(os.path.join(table_dir, rel), exist_ok=True)
-        actions.append(
-            {"op": "add", "path": rel, "min_ck": lo, "max_ck": hi - 1}
-        )
-    import shutil
 
-    shutil.rmtree(staging, ignore_errors=True)
-    _commit(table_dir, 0, actions)
-    return table_dir
+    def write(table_dir: str) -> None:
+        orders = load(spark, sf_dir, "orders").select(*_COLS, "o_orderpriority")
+        m = orders.agg(F.max("o_custkey").alias("m")).first()["m"]
+        # One partitioned write for all range files: rng counts the
+        # interior range boundaries <= custkey, so range i is exactly
+        # [i*(m+1)//K, (i+1)*(m+1)//K) (integer floor-div boundaries —
+        # a float floor(ck*K/(m+1)) misclassifies edge keys when
+        # (m+1) % K != 0). partitionBy drops rng from the data files.
+        bounds = [i * (m + 1) // _SKIP_RANGES for i in range(1, _SKIP_RANGES)]
+        rng = sum(
+            (F.col("o_custkey") >= b).cast("long") for b in bounds
+        )
+        staging = os.path.join(table_dir, "_stage_ranges")
+        orders.withColumn("rng", rng).write.partitionBy("rng").parquet(staging)
+        os.makedirs(os.path.join(table_dir, "files"))
+        actions = []
+        for i in range(_SKIP_RANGES):
+            lo = i * (m + 1) // _SKIP_RANGES
+            hi = (i + 1) * (m + 1) // _SKIP_RANGES
+            rel = f"files/r{i}"
+            src = os.path.join(staging, f"rng={i}")
+            if os.path.isdir(src):
+                os.rename(src, os.path.join(table_dir, rel))
+            else:  # empty range at tiny SF: a zone map may cover no rows
+                os.makedirs(os.path.join(table_dir, rel))
+            actions.append(
+                {"op": "add", "path": rel, "min_ck": lo, "max_ck": hi - 1}
+            )
+        shutil.rmtree(staging)
+        _commit(table_dir, 0, actions)
+
+    return scratch_once(spark, write, "txn_skip", sf_dir)
 
 
 def _skipping_pruned_files(table_dir: str, lo: int, hi: int) -> tuple[list[str], int]:
@@ -1139,20 +1114,20 @@ def table_log_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-isolation (cloning + diverging didn't change the source's
     live set)."""
     src = _build_table(spark, sf_dir)
-    clone = scratch_path(spark, "txn_clone", sf_dir)
-    if not os.path.exists(os.path.join(clone, "log", "00000001.json")):
+
+    def write(clone: str) -> None:
         live = _live_objects(src)  # [files/p0 (even), files/p2 (odd x2)]
         rel = [os.path.relpath(p, clone) for p in live]
         _commit(clone, 0, [{"op": "add", "path": r} for r in rel])
         kept = spark.read.parquet(live[0]).filter(F.col("o_orderkey") % 4 != 0)
-        kept.select(*_COLS).write.mode("overwrite").parquet(
-            os.path.join(clone, "files", "c0")
-        )
+        kept.select(*_COLS).write.parquet(os.path.join(clone, "files", "c0"))
         _commit(
             clone,
             1,
             [{"op": "remove", "path": rel[0]}, {"op": "add", "path": "files/c0"}],
         )
+
+    clone = scratch_once(spark, write, "txn_clone", sf_dir)
     source_df = spark.read.parquet(*_live_objects(src)).select(*_COLS)
     clone_df = spark.read.parquet(*_live_objects(clone)).select(*_COLS)
 

@@ -16,11 +16,12 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_spark.io import load, scratch_dir, scratch_path
+from basis_spark.io import load, scratch_dir, scratch_once
 
 
 def split_events_to_chunks(
@@ -29,41 +30,39 @@ def split_events_to_chunks(
     """Write events as n ordered parquet chunk files; returns (dir, batch_df).
 
     Chunks are split on event_id (arrival order) — each chunk is one
-    basis-style block/increment. Scratch is session-scoped so
-    concurrent sessions never race on the _done guard, and tagged with
+    basis-style block/increment. Written once per session, tagged with
     n_chunks so a call with a different count gets its own layout.
     """
-    out = scratch_path(spark, "stream_chunks", sf_dir, f"c{n_chunks}")
     ev = load(spark, sf_dir, "events")
-    if not os.path.exists(os.path.join(out, "_done")):
+
+    def write(out: str) -> None:
         n = ev.count()
         per = (n + n_chunks - 1) // n_chunks
-        # ONE pass over events instead of n_chunks filtered writes
-        # (guide §1.2: same chunks, 1/n_chunks the scan work): the chunk
-        # id becomes a partition column; repartition on it puts each
-        # chunk in exactly one task = exactly one file per chunk= dir,
-        # the same layout the per-chunk coalesce(1) writes produced.
+        # The chunk id is a partition column; repartition on it puts
+        # each chunk in exactly one task, so each chunk= dir holds
+        # exactly one file.
         (
             ev.filter((F.col("event_id") >= 0) & (F.col("event_id") < n_chunks * per))
             .withColumn("chunk", F.floor(F.col("event_id") / per).cast("int"))
             .repartition(n_chunks, "chunk")
-            .write.mode("overwrite")
-            .partitionBy("chunk")
+            .write.partitionBy("chunk")
             .parquet(out)
         )
-        # The file-source stream processes oldest-mtime first; the
-        # sequential writes used to guarantee chunk order as a side
-        # effect. Pin it explicitly (same technique as the shuffled
-        # variant below).
-        base = time.time()
-        for i in range(n_chunks):
-            d = os.path.join(out, f"chunk={i}")
-            for root, _dirs, files in os.walk(d):
-                for fn in files:
-                    p = os.path.join(root, fn)
-                    os.utime(p, (base + i * 10, base + i * 10))
-        open(os.path.join(out, "_done"), "w").close()
-    return out, ev
+        # The file-source stream processes oldest-mtime first, and the
+        # tasks of one write finish in no set order: pin chunk order.
+        _set_delivery_order(out, range(n_chunks))
+
+    return scratch_once(spark, write, "stream_chunks", sf_dir, f"c{n_chunks}"), ev
+
+
+def _set_delivery_order(chunk_dir: str, delivery: Iterable[int]) -> None:
+    """Rewrite file mtimes so chunk delivery[0] is oldest, then
+    delivery[1], ..."""
+    base = time.time()
+    for pos, chunk in enumerate(delivery):
+        for root, _dirs, files in os.walk(os.path.join(chunk_dir, f"chunk={chunk}")):
+            for fn in files:
+                os.utime(os.path.join(root, fn), (base + pos * 10, base + pos * 10))
 
 
 def split_events_to_chunks_shuffled(
@@ -74,21 +73,17 @@ def split_events_to_chunks_shuffled(
     `delivery[1]`, ... Structured Streaming's file source processes
     files oldest-modification-first (latestFirst=false), so with
     maxFilesPerTrigger=1 the micro-batch sequence IS `delivery` — the
-    adversarial reordering harness for the watermark tests. Scratch is
-    session-scoped (fresh per session, no cross-process clashes)."""
+    adversarial reordering harness for the watermark tests. Written
+    once per session."""
     src, _ = split_events_to_chunks(spark, sf_dir)
-    out = scratch_path(spark, "stream_chunks_ooo", sf_dir, "-".join(map(str, delivery)))
-    if not os.path.exists(os.path.join(out, "_done")):
-        base = time.time()
-        for pos, chunk in enumerate(delivery):
-            dst = os.path.join(out, f"chunk={chunk}")
-            shutil.copytree(os.path.join(src, f"chunk={chunk}"), dst, dirs_exist_ok=True)
-            for root, _dirs, files in os.walk(dst):
-                for fn in files:
-                    p = os.path.join(root, fn)
-                    os.utime(p, (base + pos * 10, base + pos * 10))
-        open(os.path.join(out, "_done"), "w").close()
-    return out
+
+    def write(out: str) -> None:
+        for chunk in delivery:
+            shutil.copytree(os.path.join(src, f"chunk={chunk}"),
+                            os.path.join(out, f"chunk={chunk}"), dirs_exist_ok=True)
+        _set_delivery_order(out, delivery)
+
+    return scratch_once(spark, write, "stream_chunks_ooo", sf_dir, "-".join(map(str, delivery)))
 
 
 def _read_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:

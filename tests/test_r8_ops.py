@@ -7,6 +7,7 @@ its inputs, and the z/H statistics match pure-Python references."""
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import functions as F
 
@@ -584,6 +585,12 @@ def test_pipe_syntax_plan_equals_classic(spark):
     assert sorted(map(tuple, pipe.collect())) == sorted(
         map(tuple, classic.collect())
     )
+
+    def optimized(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+", "", plan)
+
+    assert optimized(pipe) == optimized(classic)
 
 
 def test_growth_accounting_conservation(spark):

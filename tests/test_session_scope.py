@@ -12,11 +12,13 @@ import pytest
 
 import basis_spark.operators  # noqa: F401  (registers every operator)
 from basis_spark.io import load, scratch_path
+from basis_spark.operators import table_log
 from basis_spark.operators.scans import (
     scan_file_metadata,
     sink_python_datasource,
     source_fixed_width,
 )
+from basis_spark.reactive import Reactor
 from basis_spark.registry import QUERIES
 from basis_spark.session import forget, memo
 from tests.conftest import SF_SMALL
@@ -103,6 +105,69 @@ def test_python_sink_rewrites_a_scratch_dir_left_without_success(spark, tmp_path
         fh.write('{"nationkey": 0, "acctbal": 1.0}\n')
     n = load(spark, SF_SMALL, "customer").count()
     assert sum(r["n"] for r in sink_python_datasource(spark, str(sf_dir)).collect()) == n
+
+
+def _sf_copy(tmp_path, *tables: str) -> str:
+    """A fresh SF dir holding SF_SMALL's tables, so its scratch is new."""
+    sf_dir = tmp_path / "sf0.001"
+    sf_dir.mkdir()
+    for t in tables:
+        shutil.copy(os.path.join(SF_SMALL, f"{t}.parquet"), sf_dir)
+    return str(sf_dir)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+# Each key with the scratch subdir of the table it commits to.
+_TABLE_KEYS = [
+    ("table_log_snapshot", "txn_log"),
+    ("table_log_optimize", "txn_log_opt"),
+    ("table_log_clone_shallow", "txn_clone"),
+    ("pipeline_lakehouse_curation", "txn_log_curation"),
+]
+
+
+@pytest.mark.parametrize("key,subdir", _TABLE_KEYS)
+def test_table_build_retries_after_a_failed_commit(spark, tmp_path, monkeypatch, key, subdir):
+    """A table build that fails between its commits leaves v0 on disk;
+    the next call must rebuild the table, not conflict with that v0."""
+    sf_dir = _sf_copy(tmp_path, "orders", "documents")
+    table_dir = scratch_path(spark, subdir, sf_dir)
+    commit = table_log._commit
+    failed = []
+
+    def commit_failing_once(path, version, actions):
+        if path == table_dir and version == 1 and not failed:
+            failed.append(version)
+            raise OSError("injected commit failure")
+        commit(path, version, actions)
+
+    monkeypatch.setattr(table_log, "_commit", commit_failing_once)
+    with pytest.raises(OSError, match="injected"):
+        QUERIES[key](spark, sf_dir)
+    assert _rows(QUERIES[key](spark, sf_dir)) == _rows(QUERIES[key](spark, SF_SMALL))
+
+
+def test_reactive_bridge_retries_after_a_failed_poll(spark, tmp_path, monkeypatch):
+    """A poll that fails mid-ingest leaves blocks in the store; the next
+    call must ingest into a cleared store, not on top of them."""
+    sf_dir = _sf_copy(tmp_path, "events")
+    poll = Reactor.poll
+    failed = []
+
+    def poll_failing_once(self):
+        if not failed:
+            failed.append(1)
+            raise OSError("injected poll failure")
+        return poll(self)
+
+    monkeypatch.setattr(Reactor, "poll", poll_failing_once)
+    with pytest.raises(Exception, match="injected poll failure"):
+        QUERIES["stream_reactive_bridge"](spark, sf_dir)
+    clicks = load(spark, SF_SMALL, "events").filter("event_type = 'click'").count()
+    assert QUERIES["stream_reactive_bridge"](spark, sf_dir).count() == clicks
 
 
 # Keys that run SQL over DataFrames.

@@ -16,8 +16,6 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from basis_spark.io import load
-from basis_spark.operators.scans import scratch_dir
 from basis_spark.streaming.jobs import _await_finite, split_events_to_chunks
 from tests.conftest import SF_ORACLE
 
