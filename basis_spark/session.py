@@ -10,6 +10,12 @@ right default on a 1000-executor cluster reading 100 TB:
   coalescing makes the initial number mostly irrelevant.
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   byte-for-byte.
+- codegen class cache sized to the session's working set: whole-stage
+  codegen compiles one class per fused stage, and one pass over
+  bench.py's 13 keys needs 153 of them, more than Spark's default cap
+  of 100, so the LRU evicted each class before its next use and every
+  repeat recompiled (and re-JITted) about 120 classes. The conf is
+  static, so it holds only in sessions that get_spark creates.
 """
 
 from __future__ import annotations
@@ -90,6 +96,7 @@ def get_spark(app_name: str = "basis-spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # events.ts is parquet TIMESTAMP(NANOS): read as long, convert in io.load
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")

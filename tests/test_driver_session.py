@@ -8,10 +8,16 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+# The root of the checkout holding this file: the subprocesses import
+# its code, not whichever copy is installed or on the default path.
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+ROOT = sys.argv[1]
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.session.timeZone", "America/New_York")
@@ -19,7 +25,7 @@ spark = (SparkSession.builder.master("local[4]")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import importlib.util
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", f"{ROOT}/__spark_entry__.py")
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 Q = mod.queries()
@@ -37,7 +43,7 @@ print("HOSTILE_SESSION_OK")
 
 def test_queries_survive_hostile_driver_session():
     res = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, ROOT],
         capture_output=True,
         text=True,
         timeout=300,
@@ -47,7 +53,8 @@ def test_queries_survive_hostile_driver_session():
 
 PARTITION_SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+ROOT = sys.argv[1]
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[3]")
          .config("spark.sql.shuffle.partitions", "5")
@@ -58,7 +65,7 @@ spark = (SparkSession.builder.master("local[3]")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import importlib.util
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", f"{ROOT}/__spark_entry__.py")
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 import duckdb
@@ -107,7 +114,7 @@ def test_partition_sensitive_ops_stable_under_tiny_parallelism():
     partition count or per-partition ordering shows up here, not on a
     resized production cluster."""
     res = subprocess.run(
-        [sys.executable, "-c", PARTITION_SCRIPT],
+        [sys.executable, "-c", PARTITION_SCRIPT, ROOT],
         capture_output=True,
         text=True,
         timeout=600,

@@ -1,5 +1,6 @@
-"""Session scope of derived data: the memo in basis_spark/session.py and
-the scratch names from basis_spark/io.scratch_path."""
+"""Session scope of derived data: the memo in basis_spark/session.py,
+the scratch names from basis_spark/io.scratch_path and the session's
+codegen class cache."""
 
 from __future__ import annotations
 
@@ -196,3 +197,38 @@ def test_sql_keys_leave_no_temp_views(spark):
     for key in _SQL_OVER_FRAMES:
         QUERIES[key](spark, SF_SMALL)
     assert temp_views() == before
+
+
+# bench.py's 13 keys (its BENCH_KEYS values), listed here rather than
+# imported because importing bench.py switches on its fixture cache.
+_BENCH13 = [
+    "agg_groupby_multi",
+    "join_multiway_star",
+    "sort_multikey",
+    "win_row_number_topk",
+    "win_running_frame",
+    "agg_count_distinct",
+    "stream_session",
+    "agg_rollup",
+    "join_anti",
+    "str_regexp",
+    "similarity_topk",
+    "dedup_near_minhash",
+    "agg_conditional_pivot",
+]
+
+
+def test_repeat_pass_over_bench_keys_compiles_no_code(spark):
+    """One pass over bench.py's keys generates ~150 classes, more than
+    Spark's default codegen cache holds (100): with that cap each pass
+    evicted and recompiled ~120 of them. Sized to the working set, a
+    repeat pass reuses every compiled class."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount  # one sample per compiled class
+    for _ in range(2):  # the first pass also builds memos and persisted indexes
+        for key in _BENCH13:
+            QUERIES[key](spark, SF_SMALL).collect()
+    before = compiles()
+    for key in _BENCH13:
+        QUERIES[key](spark, SF_SMALL).collect()
+    assert compiles() - before == 0

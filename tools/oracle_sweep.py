@@ -26,12 +26,13 @@ Env:
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import time
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -58,7 +59,6 @@ def main() -> int:
     # timestamp key would false-fail by the UTC offset (measured:
     # 19 keys under TZ=America/Chicago). SWEEP_HOSTILE still covers
     # session-TZ hostility, which this does not mask.
-    import os
     import time as _time
 
     os.environ["TZ"] = "UTC"
