@@ -82,6 +82,10 @@ def _read_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# The checkout's scratch area (gitignored); everything scratch_dir hands out lives under it.
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+
+
 def scratch_dir(subdir: str = "") -> str:
     """A writable scratch area inside the repo (gitignored) for sinks.
 
@@ -90,8 +94,7 @@ def scratch_dir(subdir: str = "") -> str:
     requested subdir untouched for 24 h (far longer than any session
     here lives), so the area is self-cleaning without ever touching a
     live concurrent session's files."""
-    base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
-    path = os.path.join(base, subdir) if subdir else base
+    path = os.path.join(SCRATCH, subdir) if subdir else SCRATCH
     os.makedirs(path, exist_ok=True)
     if subdir:
         gc_stale_siblings(path, prefix="", keep="")

@@ -241,9 +241,9 @@ class Reactor:
         out = self._nodes[name].fn(*incs)  # None increments: input had nothing new
         n = self._append_block(name, out)
         # Commit consumption AFTER the block lands: a crash between
-        # the two re-processes the increment (at-least-once within
-        # the pass) but never skips one; readers dedupe on replay
-        # the same way the reference replays an uncommitted block.
+        # the two re-processes the increment, so it is never skipped,
+        # but the replay appends a duplicate block that no reader
+        # dedupes (at-least-once; ROADMAP item 1 makes it exactly-once).
         self._commit_consumed(name, new_state)
         return n
 

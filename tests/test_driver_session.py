@@ -30,6 +30,9 @@ mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 Q = mod.queries()
 assert len(mod.entry(spark).collect()) > 0
+# the caller launched this JVM, so get_spark's class-data archive is not in play
+jvm_args = list(spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+assert not [a for a in jvm_args if "Archive" in a or "cds" in a], jvm_args
 row = sorted(Q["date_parts"](spark, "/root/testdata/sf0.001").collect(),
              key=lambda r: r["event_id"])[0]
 # events.ts starts at 2024-01-01 00:00:00 UTC: a tz-leaking session
