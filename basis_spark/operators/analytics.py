@@ -1272,7 +1272,7 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto classification of parts by revenue: class A carries
     the first 80% of cumulative revenue, B to 95%, C the tail — the
     inventory-management classic. The cumulative share runs through
-    windows.global_cumsum (distributed two-pass prefix sum — parts
+    windows.global_scan (distributed two-pass prefix sum — parts
     scale with the fact table, so a single-partition ordered window
     would be a data-sized global sort at 100 TB). The sort key is
     (-rev, partkey) over 4dp-rounded revenue, so both engines sum the
@@ -1282,21 +1282,14 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     classify differently across engines or partition counts — accepted:
     real revenue shares don't sit at float boundaries, and the fixture
     sweep plus the partition-count-invariance test pin the behavior."""
-    from basis_spark.operators.windows import global_cumsum
+    from basis_spark.operators.windows import global_scan
 
     li = load(spark, sf_dir, "lineitem")
-    # r12 (guide §1.2): global_cumsum references its input from two plan
-    # branches (the ranged data pass and the P-row offset pass), and the
-    # committed before-plan shows the lineitem scan + per-part rollup
-    # duplicated under both (range-partition exchanges never come back
-    # as ReusedExchange). Checkpoint the rollup — parts-sized, far
-    # smaller than the fact table — so both branches read one
-    # materialization and lineitem is scanned once.
     rev = li.groupBy("l_partkey").agg(
         F.round(F.sum("l_extendedprice"), 4).alias("rev")
-    ).withColumn("neg_rev", -F.col("rev")).localCheckpoint(eager=False)
-    c = global_cumsum(rev, "rev", "neg_rev", "l_partkey")
-    share = F.col("cum") / F.col("total")
+    ).withColumn("neg_rev", -F.col("rev"))
+    c = global_scan(rev, "sum", {"cum": "rev"}, "neg_rev", "l_partkey")
+    share = F.col("cum") / F.col("cum_total")
     return c.select(
         "l_partkey",
         "rev",
@@ -1388,12 +1381,12 @@ def interval_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas over the global (t, start-before-end, user, sid) order, and
     take the per-hour max — the capacity-planning query every
     connection-pool / concurrency dashboard runs. The running sum is
-    windows.global_cumsum (distributed two-pass prefix sum — the point
+    windows.global_scan (distributed two-pass prefix sum — the point
     stream is event-scale, so a single-partition ordered window would
     be a data-sized global sort). Touching intervals count as
     overlapping (starts order before ends at equal t, pinned by the
     negd tiebreak on both engines)."""
-    from basis_spark.operators.windows import global_cumsum
+    from basis_spark.operators.windows import global_scan
 
     ev = load(spark, sf_dir, "events")
     sess = (
@@ -1409,7 +1402,7 @@ def interval_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("negd"),
         )
     )
-    run = global_cumsum(pts, "delta", "t", "negd", "user_id", "sid")
+    run = global_scan(pts, "sum", {"cum": "delta"}, "t", "negd", "user_id", "sid")
     return (
         run.groupBy(F.date_trunc("hour", "t").alias("hour"))
         .agg(F.max("cum").cast("long").alias("max_conc"))

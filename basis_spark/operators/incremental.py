@@ -563,14 +563,14 @@ def stream_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     did it arrive — the measurement that tells you what watermark
     delay a streaming job actually needs (stream_watermark_late's 1h
     delay should cover ~all of the mass below 'late<=1h'). The running
-    max is windows.global_runmax — the two-pass distributed prefix
-    pattern (range-partition on event_id, per-partition maxima
+    max is the max windows.global_scan — the two-pass distributed
+    prefix pattern (range-partition on event_id, per-partition maxima
     broadcast as prefix offsets, local running max per pid) — never a
     single-partition data sort."""
-    from basis_spark.operators.windows import global_runmax
+    from basis_spark.operators.windows import global_scan
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts")
-    a = global_runmax(ev, "ts", "event_id").withColumnRenamed("runmax", "high_water")
+    a = global_scan(ev, "max", {"high_water": "ts"}, "event_id")
     late_s = (F.unix_micros("high_water") - F.unix_micros("ts")).cast("double") / 1e6
     bucket = (
         F.when(late_s <= 0, "on_time")

@@ -1473,6 +1473,33 @@ def _bfs_oracle() -> str:
     )
 
 
+def _relax_min(
+    dist: DataFrame, nbr: DataFrame, hops: int, step, width_rows: int,
+    *keys: str, rows_per_partition: int = 500_000,
+) -> DataFrame:
+    """`hops` rounds of min-relaxation of `dist` (*keys, node, d) over
+    the neighbor list `nbr` (u, v, ...): each round joins the settled
+    table to `nbr`, offers d + `step` to every neighbor v, and keeps the
+    min d per (*keys, node). min() makes re-expanding settled nodes
+    idempotent, so no frontier is tracked; localCheckpoint cuts the
+    lineage every round. The state is graph-sized, so the loop's
+    shuffle width is pinned to `width_rows` instead of paying
+    session-width task launches every round."""
+    spark = dist.sparkSession
+    with pinned_shuffle_partitions(spark, width_rows, rows_per_partition):
+        for _ in range(hops):
+            expanded = dist.join(nbr, dist["node"] == nbr["u"]).select(
+                *keys, F.col("v").alias("node"), (F.col("d") + step).alias("d")
+            )
+            dist = (
+                dist.unionAll(expanded)
+                .groupBy(*keys, "node")
+                .agg(F.min("d").alias("d"))
+                .localCheckpoint()
+            )
+    return dist
+
+
 @register("graph_bfs_distance", oracle=_bfs_oracle())
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source breadth-first search: min hop distance from any
@@ -1497,20 +1524,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % 97 == 0)
         .select(F.col("c_custkey").alias("node"), F.lit(0).alias("d"))
     )
-    # r11: per-round state is node-sized — pin the loop's shuffle width
-    # to the edge volume instead of paying session-width task launches
-    # every hop (guide §2; same pattern as star_cc_labels).
-    with pinned_shuffle_partitions(spark, edges.count()):
-        for _ in range(_BFS_HOPS):
-            expanded = dist.join(nbr, dist["node"] == nbr["u"]).select(
-                F.col("v").alias("node"), (F.col("d") + 1).alias("d")
-            )
-            dist = (
-                dist.unionAll(expanded)
-                .groupBy("node")
-                .agg(F.min("d").alias("d"))
-                .localCheckpoint()
-            )
+    dist = _relax_min(dist, nbr, _BFS_HOPS, F.lit(1), edges.count())
     return dist.select("node", F.col("d").cast("long").alias("hops"))
 
 
@@ -1644,19 +1658,7 @@ def graph_sssp_weighted_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % 97 == 0)
         .select(F.col("c_custkey").alias("node"), F.lit(0.0).alias("d"))
     )
-    # r11: node-sized state, edge-sized joins — pin the relaxation
-    # loop's shuffle width to the measured edge volume (guide §2).
-    with pinned_shuffle_partitions(spark, nbrw.count()):
-        for _ in range(_WSSSP_HOPS):
-            expanded = dist.join(nbrw, dist["node"] == nbrw["u"]).select(
-                F.col("v").alias("node"), (F.col("d") + F.col("w")).alias("d")
-            )
-            dist = (
-                dist.unionAll(expanded)
-                .groupBy("node")
-                .agg(F.min("d").alias("d"))
-                .localCheckpoint()
-            )
+    dist = _relax_min(dist, nbrw, _WSSSP_HOPS, F.col("w"), nbrw.count())
     return dist.select("node", F.round("d", 6).alias("cost"))
 
 
@@ -2406,21 +2408,12 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("src"), F.col("c_custkey").alias("node"), F.lit(0).alias("d")
     )
-    dist = pts
-    # r11: (src, node) state fans out with the H-hop neighborhood, so
-    # size the loop width to edges with a denser rows-per-partition
-    # budget than the node-sized loops (guide §2 scale-adaptive width).
-    with pinned_shuffle_partitions(spark, proximity_edges(spark, sf_dir).count(), rows_per_partition=20_000):
-        for _ in range(_HC_HOPS):
-            expanded = dist.join(nbr, dist["node"] == nbr["u"]).select(
-                "src", F.col("v").alias("node"), (F.col("d") + 1).alias("d")
-            )
-            dist = (
-                dist.unionAll(expanded)
-                .groupBy("src", "node")
-                .agg(F.min("d").alias("d"))
-                .localCheckpoint()
-            )
+    # (src, node) state fans out with the H-hop neighborhood, so the
+    # loop width gets a denser rows-per-partition budget than the
+    # node-sized loops.
+    dist = _relax_min(
+        pts, nbr, _HC_HOPS, F.lit(1), edges.count(), "src", rows_per_partition=20_000
+    )
     return (
         dist.filter(F.col("d") >= 1)
         .groupBy(F.col("src").alias("node"))

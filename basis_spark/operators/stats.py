@@ -7,9 +7,8 @@ might have shifted a feature distribution.
 
 Scale design (100 TB): both tests reduce to ONE aggregation keyed on
 the (grouped) value followed by a distributed two-pass prefix sum over
-value order — the same range-partition + P-row-offset shape as
-windows.global_rank/global_cumsum, never a data-sized single-partition
-window. The final statistic is a 1-row combine (declared in the
+value order — windows.global_scan, the range-partition + P-row-offset
+shape, never a data-sized single-partition window. The final statistic is a 1-row combine (declared in the
 single-partition ratchet).
 """
 
@@ -32,12 +31,11 @@ def two_group_value_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
     and grand totals (ta, tb) — the shared scaffold of every rank-based
     two-sample statistic.
 
-    Distributed two-pass prefix sum (global_cumsum's shape, carried for
-    three columns at once): range-partition on v + local sort, P-row
-    per-partition subtotal table -> broadcast prefix offsets, local
-    running sums offset per partition. The only driver-sized object is
-    the P-row offset table; totals ride along as a window over those
-    same P rows."""
+    The prefix counts are one sum `windows.global_scan` over value
+    order (two columns at once): the only driver-sized object is its
+    P-row offset table, and the totals ride along on the same P rows."""
+    from basis_spark.operators.windows import global_scan
+
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin(GROUP_A, GROUP_B)
     )
@@ -50,33 +48,15 @@ def two_group_value_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
     )
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loc = (
-        g.repartitionByRange(P, F.col("v"))
-        .sortWithinPartitions("v")
-        .withColumn("pid", F.spark_partition_id())
-    )
-    psum = loc.groupBy("pid").agg(
-        F.sum("na").alias("sa"), F.sum("nb").alias("sb")
-    )
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    wtot = Window.partitionBy(F.lit(1))
-    offs = psum.select(
-        "pid",
-        F.coalesce(F.sum("sa").over(woff), F.lit(0)).alias("offa"),
-        F.coalesce(F.sum("sb").over(woff), F.lit(0)).alias("offb"),
-        F.sum("sa").over(wtot).alias("ta"),
-        F.sum("sb").over(wtot).alias("tb"),
-    )
-    wloc = Window.partitionBy("pid").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        loc.join(F.broadcast(offs), "pid")
-        .withColumn("cna", F.col("offa") + F.sum("na").over(wloc))
-        .withColumn("cnb", F.col("offb") + F.sum("nb").over(wloc))
-        .withColumn("cab", F.col("cna") + F.col("cnb"))
-        .drop("pid", "offa", "offb")
+    return global_scan(g, "sum", {"cna": "na", "cnb": "nb"}, "v").select(
+        "v",
+        "na",
+        "nb",
+        "cna",
+        "cnb",
+        (F.col("cna") + F.col("cnb")).alias("cab"),
+        F.col("cna_total").alias("ta"),
+        F.col("cnb_total").alias("tb"),
     )
 
 
@@ -1026,7 +1006,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape as the two-sample tests: one hash agg to the
     distinct-value grain, a prefix sum over value order for midranks
     (value-distinct-sized, here via one window — swap in the
-    global_cumsum P-row-offset scaffold when distinct values are
+    windows.global_scan P-row-offset scaffold when distinct values are
     data-sized), a broadcast-joined per-group rank-sum agg, and a
     1-row combine. Rank sums are half-integer-exact (< 2^53), so the
     H arithmetic is deterministic cross-engine."""

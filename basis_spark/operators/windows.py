@@ -16,59 +16,117 @@ from basis_spark.io import load
 from basis_spark.registry import register
 
 
+def _range_sorted(df: DataFrame, keys, adds) -> DataFrame:
+    """`df` range-partitioned on `keys` into P = spark.sql.shuffle.partitions
+    partitions, sorted within each, tagged with its partition id `__pid`,
+    and materialized once (a lazy local checkpoint).
+
+    Both passes of a two-pass scan read this one materialization: the
+    P-row offset table and the data pass. Two separately planned range
+    exchanges may cut at different bounds (RangePartitioner seeds its
+    sample with the RDD id, and column pruning keeps the two plans from
+    being reused as one exchange), and then a row would be offset by
+    another partition's prefix. `adds` names the columns the scan adds;
+    none may already be an input column."""
+    for col in ("__pid", *adds):
+        if col in df.columns:
+            raise ValueError(f"global scan would clobber input column {col!r}")
+    P = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.repartitionByRange(P, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+
+
+# op -> (per-partition and running aggregate, NULL-skipping combine of
+# a local running value with the prefix of all earlier partitions).
+_SCANS = {
+    "sum": (F.sum, lambda a, b: F.coalesce(a + b, a, b)),
+    "max": (F.max, F.greatest),
+}
+
+
+def _offsets(loc: DataFrame, op: str, vals: dict) -> DataFrame:
+    """The P-row offset table of `_range_sorted` output `loc`: for each
+    name -> value column in `vals`, `__off_<name>` is the `op` over all
+    EARLIER partitions (NULL for the first), and a sum also carries the
+    grand total `<name>_total`. Metadata-sized: one row per partition."""
+    agg = _SCANS[op][0]
+    part = loc.groupBy("__pid").agg(*[agg(v).alias(n) for n, v in vals.items()])
+    before = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    cols = [agg(n).over(before).alias(f"__off_{n}") for n in vals]
+    if op == "sum":
+        everyone = Window.partitionBy(F.lit(1))
+        cols += [F.sum(n).over(everyone).alias(f"{n}_total") for n in vals]
+    return part.select("__pid", *cols)
+
+
 def global_rank(df: DataFrame, *keys: str) -> DataFrame:
     """Exact global row-number over a unique sort key, computed WITHOUT
     an Exchange SinglePartition — the distributed two-pass form:
 
-      1. repartitionByRange on the sort key: partition p holds a
-         contiguous key range, ids ascending with the ranges; then
-         sortWithinPartitions — a P-way parallel local sort, never a
-         global one.
+      1. `_range_sorted`: partition p holds a contiguous key range, ids
+         ascending with the ranges, sorted locally — a P-way parallel
+         local sort, never a global one — and materialized once.
       2. local ordinal via monotonically_increasing_id's low 33 bits
-         (the per-partition counter). Deterministic here because the
-         key list is a total order — a task retry re-sorts to the same
-         row order. This replaces the row_number window its first
-         version used, saving a full data-sized hashpartitioning(pid)
-         exchange Spark would otherwise insert (it cannot prove the
-         range partitions already co-locate each pid).
-      3. per-partition counts (P rows, metadata-sized, map-side
-         combined) -> prefix-sum offsets + grand total via tiny
-         windows over those P rows, broadcast-joined back.
+         (the per-partition counter). Deterministic because the
+         materialized partitions are fixed. A row_number window over
+         the pid would cost a data-sized hashpartitioning(pid)
+         exchange (Spark cannot prove the range partitions already
+         co-locate each pid).
+      3. per-partition counts (P rows) -> prefix offsets + grand total
+         (`_offsets`), broadcast-joined back.
       4. global rank = offset[pid] + local ordinal + 1.
 
-    ONE data-sized shuffle total (the range partition); the only
-    driver-sized object is the P-row offset table. P follows
-    spark.sql.shuffle.partitions, so parallelism scales with the
-    cluster. The caller's key list must be a total order (include a
-    unique id) so rank is deterministic and tie-free.
+    P follows spark.sql.shuffle.partitions, so parallelism scales with
+    the cluster. The caller's key list must be a total order (include
+    a unique id) so rank is deterministic and tie-free.
 
     Returns the input columns plus `rank` (1-based, gapless) and
     `n_total` (grand total, same on every row).
     """
-    for col in ("rank", "n_total", "__gr_mid", "__gr_pid", "__gr_lr", "__gr_off"):
-        if col in df.columns:
-            raise ValueError(f"global_rank would clobber input column {col!r}")
-    spark = df.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loc = (
-        df.repartitionByRange(P, *[F.col(k) for k in keys])
-        .sortWithinPartitions(*keys)
-        .withColumn("__gr_mid", F.monotonically_increasing_id())
-        .withColumn("__gr_pid", F.spark_partition_id())
-        .withColumn("__gr_lr", (F.col("__gr_mid") % F.lit(1 << 33)) + 1)
-        .drop("__gr_mid")
-    )
-    cnt = loc.groupBy("__gr_pid").agg(F.count(F.lit(1)).alias("c"))
-    woff = Window.orderBy("__gr_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        cnt.withColumn("__gr_off", F.coalesce(F.sum("c").over(woff), F.lit(0)))
-        .withColumn("n_total", F.sum("c").over(Window.partitionBy(F.lit(1))))
-        .select("__gr_pid", "__gr_off", "n_total")
-    )
+    loc = _range_sorted(df, keys, ("rank", "n_total", "__lr", "__off_c"))
+    offs = _offsets(loc, "sum", {"c": F.lit(1)}).withColumnRenamed("c_total", "n_total")
+    lr = F.monotonically_increasing_id() % F.lit(1 << 33) + 1
     return (
-        loc.join(F.broadcast(offs), "__gr_pid")
-        .withColumn("rank", F.col("__gr_lr") + F.col("__gr_off"))
-        .drop("__gr_pid", "__gr_lr", "__gr_off")
+        loc.withColumn("__lr", lr)
+        .join(F.broadcast(offs), "__pid")
+        .withColumn("rank", _SCANS["sum"][1](F.col("__lr"), F.col("__off_c")))
+        .drop("__pid", "__lr", "__off_c")
+    )
+
+
+def global_scan(
+    df: DataFrame, op: str, cols: dict[str, str], *keys: str, exclusive: bool = False
+) -> DataFrame:
+    """Distributed EXACT prefix scan over the global total order `keys`
+    (Blelloch's two-pass form): for each out -> value column in `cols`,
+    `out` is the running `op` ("sum" or "max") of the value up to and
+    including each row, or strictly before it with `exclusive`. A sum
+    scan also returns `<out>_total`, the grand total on every row.
+
+    One range partition + local sort materialized once
+    (`_range_sorted`), the P-row offset table broadcast back
+    (`_offsets`), and a local running aggregate per partition. That
+    local window costs one hash exchange on `__pid` (Catalyst cannot
+    prove the range partitions already co-locate each pid) — a
+    PARALLEL data-sized shuffle, never a SinglePartition sort. Like SQL
+    window aggregates, NULL values are skipped, and a row with no
+    earlier non-NULL value gets NULL. The key list must be a total
+    order for determinism."""
+    agg, combine = _SCANS[op]
+    totals = [f"{o}_total" for o in cols] if op == "sum" else []
+    loc = _range_sorted(df, keys, (*cols, *totals, *(f"__off_{o}" for o in cols)))
+    offs = _offsets(loc, op, {o: F.col(v) for o, v in cols.items()})
+    run = Window.partitionBy("__pid").orderBy(*keys).rowsBetween(
+        Window.unboundedPreceding, -1 if exclusive else 0
+    )
+    return loc.join(F.broadcast(offs), "__pid").select(
+        *df.columns,
+        *[combine(agg(v).over(run), F.col(f"__off_{o}")).alias(o) for o, v in cols.items()],
+        *totals,
     )
 
 
@@ -805,91 +863,6 @@ def win_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id", "user_id", F.round(z, 6).alias("z"))
 
 
-def global_cumsum(df: DataFrame, val_col: str, *keys: str) -> DataFrame:
-    """Distributed EXACT prefix sum over a global total order — the
-    companion primitive to global_rank for cumulative-share analytics
-    (Pareto/ABC cuts, cumulative-distribution tables).
-
-    Same two-pass shape: range-partition + local sort on the key list,
-    per-partition sums (P rows, map-side combined) -> broadcast prefix
-    offsets, then cumsum = offset[pid] + local running sum. The local
-    running sum is a pid-partitioned ordered window, which costs one
-    hash exchange on pid (Catalyst cannot prove the range partitions
-    already co-locate each pid) — a PARALLEL data-sized shuffle, never
-    a SinglePartition sort; the only driver-sized object is the P-row
-    offset table. Returns input columns + `cum` (inclusive prefix sum
-    of val_col) + `total` (grand total on every row). Key list must be
-    a total order for determinism."""
-    for col in ("cum", "total", "__gc_pid", "__gc_off"):
-        if col in df.columns:
-            raise ValueError(f"global_cumsum would clobber input column {col!r}")
-    spark = df.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loc = (
-        df.repartitionByRange(P, *[F.col(k) for k in keys])
-        .sortWithinPartitions(*keys)
-        .withColumn("__gc_pid", F.spark_partition_id())
-    )
-    psum = loc.groupBy("__gc_pid").agg(F.sum(val_col).alias("s"))
-    woff = Window.orderBy("__gc_pid").rowsBetween(Window.unboundedPreceding, -1)
-    # Typed zero: coalescing with lit(0.0) would silently coerce a
-    # long/decimal prefix sum to double, breaking exactness past 2^53.
-    zero = F.lit(0).cast(psum.schema["s"].dataType)
-    offs = (
-        psum.withColumn("__gc_off", F.coalesce(F.sum("s").over(woff), zero))
-        .withColumn("total", F.sum("s").over(Window.partitionBy(F.lit(1))))
-        .select("__gc_pid", "__gc_off", "total")
-    )
-    wloc = Window.partitionBy("__gc_pid").orderBy(*keys).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        loc.join(F.broadcast(offs), "__gc_pid")
-        .withColumn("cum", F.col("__gc_off") + F.sum(val_col).over(wloc))
-        .drop("__gc_pid", "__gc_off")
-    )
-
-
-def global_runmax(df: DataFrame, val_col: str, *keys: str) -> DataFrame:
-    """Distributed EXACT running max over a global total order — the
-    max-monoid sibling of global_cumsum, housed here so the two-pass
-    prefix primitives evolve together (stream_lateness_profile used to
-    carry its own inline copy). Same shape: range-partition + local
-    sort on the key list, per-partition maxima (P rows) -> broadcast
-    prefix offsets, runmax = greatest(local running max, prefix max).
-    Returns input columns + `runmax` (inclusive). Key list must be a
-    total order for determinism."""
-    for col in ("runmax", "__gm_pid", "__gm_prev"):
-        if col in df.columns:
-            raise ValueError(f"global_runmax would clobber input column {col!r}")
-    spark = df.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loc = (
-        df.repartitionByRange(P, *[F.col(k) for k in keys])
-        .sortWithinPartitions(*keys)
-        .withColumn("__gm_pid", F.spark_partition_id())
-    )
-    pmax = loc.groupBy("__gm_pid").agg(F.max(val_col).alias("m"))
-    woff = Window.orderBy("__gm_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = pmax.withColumn("__gm_prev", F.max("m").over(woff)).select(
-        "__gm_pid", "__gm_prev"
-    )
-    wloc = Window.partitionBy("__gm_pid").orderBy(*keys).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        loc.join(F.broadcast(offs), "__gm_pid")
-        .withColumn(
-            "runmax",
-            F.greatest(
-                F.max(val_col).over(wloc),
-                F.coalesce(F.col("__gm_prev"), F.col(val_col)),
-            ),
-        )
-        .drop("__gm_pid", "__gm_prev")
-    )
-
-
 @register(
     "win_topk_with_ties",
     oracle="""
@@ -1154,45 +1127,6 @@ def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def global_runmax_excl(df: DataFrame, val_col: str, *keys: str) -> DataFrame:
-    """EXCLUSIVE distributed running max over a global total order —
-    global_runmax with a (unbounded preceding, 1 preceding) local
-    frame, NULL for the global first row. The primitive skyline /
-    dominance scans need: 'max over rows STRICTLY before me', where
-    the inclusive form cannot distinguish a row's own value from an
-    earlier equal one. Same two-pass shape; the P-row offset table is
-    unchanged (a partition's exclusive prefix still includes every
-    EARLIER partition fully)."""
-    for col in ("runmax_excl", "__gx_pid", "__gx_prev"):
-        if col in df.columns:
-            raise ValueError(
-                f"global_runmax_excl would clobber input column {col!r}"
-            )
-    spark = df.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loc = (
-        df.repartitionByRange(P, *[F.col(k) for k in keys])
-        .sortWithinPartitions(*keys)
-        .withColumn("__gx_pid", F.spark_partition_id())
-    )
-    pmax = loc.groupBy("__gx_pid").agg(F.max(val_col).alias("m"))
-    woff = Window.orderBy("__gx_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = pmax.withColumn("__gx_prev", F.max("m").over(woff)).select(
-        "__gx_pid", "__gx_prev"
-    )
-    wloc = Window.partitionBy("__gx_pid").orderBy(*keys).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    return (
-        loc.join(F.broadcast(offs), "__gx_pid")
-        .withColumn(
-            "runmax_excl",
-            F.greatest(F.max(val_col).over(wloc), F.col("__gx_prev")),
-        )
-        .drop("__gx_pid", "__gx_prev")
-    )
-
-
 @register(
     "win_skyline_pareto_2d",
     oracle="""
@@ -1219,7 +1153,7 @@ def win_skyline_pareto_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusive prefix-max scan in x-descending order keeps exactly the
     points whose y beats every higher-x point.
 
-    The scan is windows.global_runmax_excl — the two-pass
+    The scan is the exclusive max `global_scan` — the two-pass
     range-partition prefix pattern (P-way parallel local sorts, P-row
     offset table) — so no data-sized single-partition window exists in
     the plan, unlike the textbook OVER (ORDER BY x) formulation the
@@ -1231,12 +1165,9 @@ def win_skyline_pareto_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_discount").alias("y")
     )
     neg = pts.withColumn("negx", -F.col("x"))
-    scanned = global_runmax_excl(neg, "y", "negx")
+    scanned = global_scan(neg, "max", {"pm": "y"}, "negx", exclusive=True)
     return (
-        scanned.filter(
-            F.col("runmax_excl").isNull()
-            | (F.col("y") > F.col("runmax_excl"))
-        )
+        scanned.filter(F.col("pm").isNull() | (F.col("y") > F.col("pm")))
         .select(
             F.round("x", 2).alias("price"), F.round("y", 2).alias("discount")
         )

@@ -85,7 +85,10 @@ Q, O = mod.queries(), mod.oracle_sql()
 KEYS = ["win_ntile_pctile", "agg_hist_equi_depth", "abc_pareto_class",
         "stat_ks_two_sample", "stat_mann_whitney_u", "stream_lateness_profile",
         "pack_tokens_nextfit", "cumulative_distinct_users",
-        "customer_rfm_segmentation", "interval_max_concurrency"]
+        "customer_rfm_segmentation", "interval_max_concurrency",
+        "win_skyline_pareto_2d", "eval_auc_rank", "agg_percentile_exact_scaffold",
+        "text_perplexity_bucket", "multimodal_shard_pack_balanced",
+        "corpus_shuffle_epochs"]
 def canon(rows, cols):
     out = []
     for r in rows:

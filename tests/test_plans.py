@@ -86,16 +86,32 @@ def test_hash_sample_group_limit_pushdown(spark):
     assert "WindowGroupLimit" in _plan(df)
 
 
-def test_ntile_pctile_no_global_window(spark):
+def _checkpoint_inputs(monkeypatch, spark) -> list[str]:
+    """Collects the executed plan of every frame that is localCheckpoint-ed
+    from now on: a two-pass scan's range exchange lives in the frame it
+    materializes, not in the final plan that reads the materialization."""
+    cls = type(spark.range(1))
+    real, seen = cls.localCheckpoint, []
+
+    def spy(self, *args, **kwargs):
+        seen.append(_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return seen
+
+
+def test_ntile_pctile_no_global_window(spark, monkeypatch):
     # win_ntile_pctile's two-pass form (windows.global_rank) must never
     # sort the data through a single partition. The local ordinal comes
     # from monotonically_increasing_id after a range partition + local
     # sort, so the plan has NO data-sized window at all: the only
     # windows are the prefix-sum/total over the P-row count table, and
     # the only SinglePartition exchange is over that same tiny table.
+    materialized = _checkpoint_inputs(monkeypatch, spark)
     df = windows.win_ntile_pctile(spark, SF_ORACLE)
     plan = _plan(df)
-    assert "rangepartitioning" in plan
+    assert any("rangepartitioning" in p for p in materialized)
     win_lines = [ln for ln in plan.splitlines() if "Window [" in ln]
     assert win_lines, "expected the P-row offset windows"
     assert all("sum(c#" in ln for ln in win_lines), win_lines
@@ -312,7 +328,7 @@ _SINGLE_PARTITION_OK = {
     "ts_max_drawdown",       # same calendar-bounded per-day spine
     "ts_cusum_changepoint",  # same spine + 1-row mean combine
     "survival_kaplan_meier", # risk-table window, bounded by distinct durations (≤ users)
-    "abc_pareto_class",      # global_cumsum's P-row offset table only (data cumsum is pid-parallel)
+    "abc_pareto_class",      # global_scan's P-row offset table only (data cumsum is pid-parallel)
     "text_bigram_pmi",       # 1-row corpus-total combine (unigram sum)
     "retention_dn_curve",    # 1-row cohort-size combine
     "dq_expectations_report",  # five 1-row rule-count combines unioned
@@ -326,7 +342,7 @@ _SINGLE_PARTITION_OK = {
     "ts_autocorrelation",    # ordinal window over the calendar-bounded daily rollup
     "ts_forecast_snaive",    # ordered lag over the same calendar-bounded rollup
     "ts_var_cvar",           # same spine + 1-row VaR combine
-    "interval_max_concurrency",  # global_cumsum's P-row offset table (sweep itself is pid-parallel)
+    "interval_max_concurrency",  # global_scan's P-row offset table (sweep itself is pid-parallel)
     "win_ntile_pctile",      # P-row per-partition count table only (plan-asserted above)
     "agg_hist_equi_depth",   # same two-pass global_rank: P-row count table only, never data-sized
     "customer_rfm_segmentation",  # 3x global_rank over the customer rollup: 3 P-row count tables
@@ -365,7 +381,7 @@ _SINGLE_PARTITION_OK = {
     "event_decay_engagement",     # 1-row max-ts anchor combine broadcast into the decay expr
     "maintenance_stats_sampled",  # 1-row calibration-report combine
     "agg_percentile_exact_scaffold",  # global_rank P-row offset table + 3-row target combine
-    "win_skyline_pareto_2d",      # runmax_excl P-row offset table only (scan is pid-parallel)
+    "win_skyline_pareto_2d",      # exclusive max scan's P-row offset table only (scan is pid-parallel)
     "dq_referential_orphans",  # seven 1-row per-edge count combines unioned
     "cumulative_distinct_users",  # cumulative window over the ~#days spine (calendar-bounded)
     "funnel_time_to_convert",  # 1-row delay-percentile combine over the users-sized delays
@@ -555,13 +571,15 @@ def test_null_skew_isolation_filters_before_exchange(spark):
     assert "Union" in plan
 
 
-def test_balanced_shard_pack_has_no_global_sort(spark):
+def test_balanced_shard_pack_has_no_global_sort(spark, monkeypatch):
     """The snake-dealing router must rank via the two-pass scaffold:
-    rangepartitioning yes, data-sized global window no."""
+    rangepartitioning yes (in the materialized scan input), data-sized
+    global window no."""
     from basis_spark.operators import llm
 
+    materialized = _checkpoint_inputs(monkeypatch, spark)
     plan = _plan(llm.multimodal_shard_pack_balanced(spark, SF_ORACLE))
-    assert "rangepartitioning" in plan
+    assert any("rangepartitioning" in p for p in materialized)
     assert "row_number()" not in plan
 
 

@@ -10,7 +10,9 @@ Deterministic: derandomize=True so CI never flakes on a fresh example.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from contextlib import contextmanager
+
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -331,28 +333,45 @@ def test_sessionizer_heavy_user(spark, tmp_path_factory):
     assert light.n_events.iloc[0] == 5 and light.dur_seconds.iloc[0] == 240.0
 
 
+@contextmanager
+def _sparse_range_samples(spark):
+    """Sample 2 rows per partition for range bounds: two separately
+    sampled range exchanges then cut at visibly different bounds, so a
+    two-pass scan whose passes do not share one partitioning goes wrong."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
 @given(cutoff=st.integers(min_value=0, max_value=400000))
 @settings(**SETTINGS)
 def test_global_rank_exact_under_filters(spark, duck, cutoff):
     """windows.global_rank (the distributed two-pass exact rank behind
     win_ntile_pctile and agg_hist_equi_depth) must equal a plain SQL
-    row_number for arbitrary subsets — gapless, 1-based, tie-free."""
+    row_number for arbitrary subsets — gapless, 1-based, tie-free —
+    with a non-key payload column carried through (the data pass then
+    differs from the pruned offset pass) and sparse range samples."""
     from basis_spark.operators.windows import global_rank
 
     df = (
         load(spark, SF_ORACLE, "orders")
         .filter(F.col("o_totalprice") > cutoff)
-        .select("o_orderkey", "o_totalprice")
-    )
-    ranked = global_rank(df, "o_totalprice", "o_orderkey").select(
-        "o_orderkey", F.col("rank").cast("long").alias("rank")
+        .select("o_orderkey", "o_totalprice", "o_custkey")
     )
     sql = f"""
-        SELECT o_orderkey,
+        SELECT o_orderkey, o_custkey,
                row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rank
         FROM orders WHERE o_totalprice > {cutoff}
     """
-    compare_frames(ranked, duck, sql, key=f"prop_global_rank[{cutoff}]")
+    with _sparse_range_samples(spark):
+        ranked = global_rank(df, "o_totalprice", "o_orderkey").select(
+            "o_orderkey", "o_custkey", F.col("rank").cast("long").alias("rank")
+        )
+        compare_frames(ranked, duck, sql, key=f"prop_global_rank[{cutoff}]")
 
 
 def test_zorder_layout_shrinks_bounding_boxes(spark, tmp_path):
@@ -457,32 +476,56 @@ def test_pagerank_mass_conservation(spark):
     assert all(r["rank"] > 0 for r in rows)
 
 
-@given(cutoff=st.integers(min_value=0, max_value=400000))
-@settings(**SETTINGS)
-def test_global_cumsum_exact_under_filters(spark, duck, cutoff):
-    """windows.global_cumsum (the distributed two-pass prefix sum behind
-    abc_pareto_class) must equal a plain SQL cumulative SUM for
-    arbitrary subsets. Sums run over integer-cast prices so float
-    accumulation order cannot blur the check — this pins ORDERING and
-    OFFSET arithmetic, the parts the two-pass form could get wrong."""
-    from basis_spark.operators.windows import global_cumsum
+_SCANS = [("sum", False), ("max", False), ("max", True)]
 
+
+@given(
+    cutoff=st.integers(min_value=0, max_value=400000),
+    scan=st.sampled_from(_SCANS),
+)
+@example(cutoff=0, scan=_SCANS[0])
+@example(cutoff=0, scan=_SCANS[1])
+@example(cutoff=0, scan=_SCANS[2])
+@settings(**SETTINGS)
+def test_global_cumsum_exact_under_filters(spark, duck, cutoff, scan):
+    """windows.global_scan (the distributed two-pass prefix scan behind
+    abc_pareto_class, stream_lateness_profile and the skyline) must
+    equal the plain SQL window for arbitrary subsets: the cumulative
+    SUM with its total, and the running MAX, inclusive and exclusive.
+    Sums run over integer-cast prices so float accumulation order
+    cannot blur the check — this pins ORDERING and OFFSET arithmetic,
+    the parts the two-pass form could get wrong. A non-key payload
+    column rides through and range samples are sparse, so the two
+    passes would cut differently if they did not share one
+    partitioning."""
+    from basis_spark.operators.windows import global_scan
+
+    op, exclusive = scan
     df = (
         load(spark, SF_ORACLE, "orders")
         .filter(F.col("o_totalprice") > cutoff)
-        .select("o_orderkey", F.floor("o_totalprice").cast("long").alias("p"))
+        .select(
+            "o_orderkey", "o_custkey", F.floor("o_totalprice").cast("long").alias("p")
+        )
     )
-    out = global_cumsum(df, "p", "o_orderkey").select(
-        "o_orderkey", F.col("cum").cast("long").alias("cum"),
-        F.col("total").cast("long").alias("total"),
-    )
+    frame = "1 PRECEDING" if exclusive else "CURRENT ROW"
+    total = ", CAST(sum(floor(o_totalprice)) OVER () AS BIGINT) AS total" if op == "sum" else ""
     sql = f"""
-        SELECT o_orderkey,
-               CAST(sum(floor(o_totalprice)) OVER (ORDER BY o_orderkey) AS BIGINT) AS cum,
-               CAST(sum(floor(o_totalprice)) OVER () AS BIGINT) AS total
+        SELECT o_orderkey, o_custkey,
+               CAST({op}(floor(o_totalprice)) OVER (ORDER BY o_orderkey
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND {frame}) AS BIGINT) AS cum
+               {total}
         FROM orders WHERE o_totalprice > {cutoff}
     """
-    compare_frames(out, duck, sql, key=f"prop_global_cumsum[{cutoff}]")
+    with _sparse_range_samples(spark):
+        out = global_scan(df, op, {"cum": "p"}, "o_orderkey", exclusive=exclusive)
+        cols = ["o_orderkey", "o_custkey", F.col("cum").cast("long").alias("cum")]
+        if op == "sum":
+            cols.append(F.col("cum_total").cast("long").alias("total"))
+        compare_frames(
+            out.select(*cols), duck, sql,
+            key=f"prop_global_scan[{op},{exclusive},{cutoff}]",
+        )
 
 
 @given(
