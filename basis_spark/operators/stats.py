@@ -8,8 +8,8 @@ might have shifted a feature distribution.
 Scale design (100 TB): both tests reduce to ONE aggregation keyed on
 the (grouped) value followed by a distributed two-pass prefix sum over
 value order — windows.global_scan, the range-partition + P-row-offset
-shape, never a data-sized single-partition window. The final statistic is a 1-row combine (declared in the
-single-partition ratchet).
+shape, never a data-sized single-partition window. The final statistic
+is a 1-row combine (declared in the single-partition ratchet).
 """
 
 from __future__ import annotations

@@ -93,7 +93,7 @@ def global_rank(df: DataFrame, *keys: str) -> DataFrame:
     return (
         loc.withColumn("__lr", lr)
         .join(F.broadcast(offs), "__pid")
-        .withColumn("rank", _SCANS["sum"][1](F.col("__lr"), F.col("__off_c")))
+        .withColumn("rank", F.col("__lr") + F.coalesce("__off_c", F.lit(0)))
         .drop("__pid", "__lr", "__off_c")
     )
 
